@@ -32,8 +32,8 @@ final class DeltaSharingClient(val profile: Profile,
       * 4xx other than 429 fail immediately (they are deterministic). */
     maxRetries: Int = 3) {
 
-  private val http = HttpClient.newBuilder()
-    .connectTimeout(java.time.Duration.ofSeconds(30)).build()
+  import DeltaSharingClient.http
+
   private val mapper = new ObjectMapper()
 
   // ---- auth -------------------------------------------------------------
@@ -348,6 +348,13 @@ final class DeltaSharingClient(val profile: Profile,
 }
 
 object DeltaSharingClient {
+  /** The one HTTP client of this JVM: REST calls, signed-URL data reads
+    * and URL refreshes all share it, so keep-alive connections are reused
+    * across clients, streams, files and tasks, and one selector thread
+    * serves them all. */
+  private[sharing] val http: HttpClient = HttpClient.newBuilder()
+    .connectTimeout(java.time.Duration.ofSeconds(30)).build()
+
   /** Upper bound on a single retry sleep — a hostile/misconfigured
     * `Retry-After: 86400` must not park a task thread for hours. */
   val maxBackoffMs: Long = 10000L

@@ -1,10 +1,11 @@
 package graft.sharing.fs
 
 import java.net.URI
-import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.net.http.{HttpRequest, HttpResponse}
 import org.apache.hadoop.fs._
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import scala.jdk.OptionConverters._
 
 /** Read-only Hadoop FileSystem for Delta Sharing pre-signed URLs, scheme
   * `graftshare`.
@@ -23,6 +24,15 @@ import org.apache.hadoop.util.Progressable
   * `AsyncFileReader` (reader.rs:25-49), but feeding Spark's vectorized
   * parquet reader. Executors resolve paths independently: nothing is
   * driver-resident, so a 1000-executor scan needs no shared state.
+  *
+  * Transport: every stream sends its GETs through the one JVM-wide
+  * `DeltaSharingClient.http`, so streams, files and tasks reuse keep-alive
+  * connections. The server answers each Range GET with only the requested
+  * slice; `LocalSharingServer` reads just that slice from disk and runs
+  * with `TCP_NODELAY`, without which every answer with a body stalls
+  * about 40 ms on Nagle's algorithm meeting the client's delayed ACK. A read that lands
+  * in a file's last 64 KiB fetches that whole tail, so parquet's footer
+  * (length, then metadata) costs one GET.
   */
 final class SignedHttpFileSystem extends FileSystem {
 
@@ -213,7 +223,6 @@ final class SignedHttpInputStream(url: String, size: Long, chunkSize: Int,
     refresh: Option[SignedHttpFileSystem.RefreshSpec] = None)
     extends FSInputStream {
 
-  private val http = HttpClient.newHttpClient()
   private var pos = 0L
   private var buf: Array[Byte] = Array.emptyByteArray
   private var bufStart = 0L
@@ -224,21 +233,39 @@ final class SignedHttpInputStream(url: String, size: Long, chunkSize: Int,
   /** Up to TWO refresh attempts per range read: the first may return a
     * CACHED fresh URL (populated by another stream's listing); if that
     * one has expired too, the second attempt passes it as the failed URL,
-    * which invalidates the cache entry and forces a real re-list. */
+    * which invalidates the cache entry and forces a real re-list.
+    *
+    * The answer must be exactly the requested bytes: a `206` of
+    * `end - start + 1` bytes (and a matching `Content-Range`, when sent),
+    * or a `200` carrying the whole file — a proxy that ignores `Range` —
+    * which is sliced here. Anything else fails with a
+    * `BadRangeResponseException` and never reaches the buffer. */
   private def fetchRange(start: Long, end: Long,
       refreshAttempts: Int = 0): Array[Byte] = {
     val req = HttpRequest.newBuilder(URI.create(activeUrl))
       .header("Range", s"bytes=$start-$end").GET().build()
-    val resp = http.send(req, HttpResponse.BodyHandlers.ofByteArray())
-    if (resp.statusCode() >= 400) {
-      if (resp.statusCode() < 500 && refresh.isDefined && refreshAttempts < 2) {
+    val resp = graft.sharing.DeltaSharingClient.http
+      .send(req, HttpResponse.BodyHandlers.ofByteArray())
+    val code = resp.statusCode()
+    if (code >= 400) {
+      if (code < 500 && refresh.isDefined && refreshAttempts < 2) {
         activeUrl = SignedHttpInputStream.refreshUrl(refresh.get, activeUrl)
         return fetchRange(start, end, refreshAttempts + 1)
       }
       throw new java.io.IOException(
-        s"HTTP ${resp.statusCode()} reading range $start-$end (signed URL may have expired)")
+        s"HTTP $code reading range $start-$end (signed URL may have expired)")
     }
-    resp.body()
+    val body = resp.body()
+    val contentRange = resp.headers().firstValue("Content-Range").toScala
+    if (code == 206 && body.length == end - start + 1 &&
+        contentRange.forall(_.startsWith(s"bytes $start-$end/")))
+      body
+    else if (code == 200 && body.length == size)
+      java.util.Arrays.copyOfRange(body, start.toInt, end.toInt + 1)
+    else throw new BadRangeResponseException(
+      s"HTTP $code with ${body.length} bytes" +
+        contentRange.map(r => s" ($r)").getOrElse("") +
+        s" for range $start-$end of a $size-byte file")
   }
 
   override def seek(newPos: Long): Unit = {
@@ -270,22 +297,38 @@ final class SignedHttpInputStream(url: String, size: Long, chunkSize: Int,
   /** Positioned read: exact range, cursor untouched. */
   override def read(position: Long, b: Array[Byte], off: Int, len: Int): Int = {
     if (position >= size) return -1
+    // an empty range `bytes=p-(p-1)` is unsatisfiable (416) on the wire
+    if (len == 0) return 0
     val end = math.min(position + len, size) - 1
     val got = fetchRange(position, end)
     System.arraycopy(got, 0, b, off, got.length)
     got.length
   }
 
+  /** Buffer a window from `at`; one that would start in the file's last
+    * `tailWindow` bytes starts at that tail instead, so parquet's footer
+    * length read and the footer read that follows it share one GET. */
   private def fill(at: Long): Unit = {
-    val end = math.min(at + chunkSize, size) - 1
-    buf = fetchRange(at, end)
-    bufStart = at
+    val tail = math.min(SignedHttpInputStream.tailWindow, chunkSize).toLong
+    val start = if (at >= size - tail) math.max(0L, size - tail) else at
+    val end = math.min(start + chunkSize, size) - 1
+    buf = fetchRange(start, end)
+    bufStart = start
   }
 
   override def close(): Unit = ()
 }
 
+/** A data GET answered with bytes other than the requested range. The
+  * message names the status, lengths and range, never the signed URL. */
+final class BadRangeResponseException(message: String)
+    extends java.io.IOException(message)
+
 object SignedHttpInputStream {
+  /** The tail a read near EOF fetches whole: parquet footers of typical
+    * files fit in it, so their two reads cost one GET. */
+  private[fs] val tailWindow: Int = 64 * 1024
+
   /** (table key # file id) → fresh signed URL, shared across streams in
     * this JVM. Keyed per table snapshot so same-named files in different
     * shares/versions can never serve each other's URLs. */

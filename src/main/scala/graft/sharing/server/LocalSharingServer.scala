@@ -2,7 +2,8 @@ package graft.sharing.server
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import java.net.InetSocketAddress
-import java.nio.file.{Files, Path, Paths}
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 import graft.sharing.DeltaSchema
@@ -16,6 +17,15 @@ import graft.sharing.DeltaSchema
   * `{errorCode,message}` 4xx bodies, and "pre-signed" data URLs
   * (signature + expiry query params) honoring HTTP Range requests — the
   * executor read path.
+  *
+  * Transport: every accepted connection runs with `TCP_NODELAY`. The JDK
+  * server writes a response's headers and body as two writes, and with
+  * Nagle's algorithm on, the body waits for the client's delayed ACK —
+  * about 40 ms on every answer that has a body, REST call or Range GET
+  * alike (see the companion object for why the switch is a JVM-wide
+  * property). A Range
+  * GET reads only the requested slice, with positional `FileChannel`
+  * reads, so server disk reads equal bytes served.
   *
   * Used by the test suite and by ConnectorQueries to prove the whole
   * client→scan path inside the driver's correctness gate. It is also a
@@ -77,6 +87,15 @@ final class LocalSharingServer(
   @volatile var failNextRequests: Int = 0
   @volatile var failNextCode: Int = 503
 
+  /** Fault injection: answer every data GET with `200` and the whole
+    * file, as a proxy or CDN that ignores `Range` does. */
+  @volatile var ignoreRange: Boolean = false
+
+  private val dataGets = new java.util.concurrent.atomic.AtomicLong(0)
+  /** Number of signed-URL data requests served so far (for GET-count
+    * assertions in specs). */
+  def dataRequests: Long = dataGets.get()
+
   private var server: HttpServer = _
   @volatile private var started = false
 
@@ -109,7 +128,7 @@ final class LocalSharingServer(
 
   def start(): Int = synchronized {
     if (!started) {
-      server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+      server = LocalSharingServer.newHttpServer()
       server.createContext("/", exchange => handle(exchange))
       // daemon workers: an embedded test/demo server must never keep the
       // host JVM alive (runMain would hang at exit otherwise)
@@ -526,21 +545,43 @@ final class LocalSharingServer(
       case None =>
         respond(x, 404, """{"errorCode":"RESOURCE_DOES_NOT_EXIST","message":"no such file"}""")
       case Some(f) =>
-        val all = Files.readAllBytes(f.path)
-        Option(x.getRequestHeaders.getFirst("Range")) match {
-          case Some(r) if r.startsWith("bytes=") =>
-            val Array(s, e) = r.stripPrefix("bytes=").split("-", 2)
-            val start = if (s.isEmpty) 0L else s.toLong
-            val end = if (e.isEmpty) all.length - 1L else math.min(e.toLong, all.length - 1L)
-            val slice = java.util.Arrays.copyOfRange(all, start.toInt, end.toInt + 1)
-            x.getResponseHeaders.set("Content-Range",
-              s"bytes $start-$end/${all.length}")
-            x.sendResponseHeaders(206, slice.length)
-            x.getResponseBody.write(slice)
-          case _ =>
-            x.sendResponseHeaders(200, all.length)
-            x.getResponseBody.write(all)
-        }
+        dataGets.incrementAndGet()
+        val ch = FileChannel.open(f.path, StandardOpenOption.READ)
+        try {
+          val len = ch.size()
+          val range = Option(x.getRequestHeaders.getFirst("Range"))
+            .filter(r => r.startsWith("bytes=") && !ignoreRange)
+          range.map(LocalSharingServer.parseRange(_, len)) match {
+            case Some(Some((start, end))) =>
+              x.getResponseHeaders.set("Content-Range", s"bytes $start-$end/$len")
+              x.sendResponseHeaders(206, end - start + 1)
+              sendSlice(x, ch, start, end - start + 1)
+            case Some(None) =>
+              x.getResponseHeaders.set("Content-Range", s"bytes */$len")
+              respond(x, 416,
+                """{"errorCode":"RANGE_NOT_SATISFIABLE","message":"range not satisfiable"}""")
+            case None =>
+              // length 0 means "chunked" to HttpExchange; -1 means no body
+              x.sendResponseHeaders(200, if (len == 0) -1 else len)
+              sendSlice(x, ch, 0, len)
+          }
+        } finally ch.close()
+    }
+  }
+
+  /** Copy `n` bytes from `start` of `ch` to the response body with
+    * positional reads, 64 KiB at a time. */
+  private def sendSlice(x: HttpExchange, ch: FileChannel, start: Long,
+      n: Long): Unit = {
+    val buf = java.nio.ByteBuffer.allocate(math.min(n, 1L << 16).toInt)
+    val out = x.getResponseBody
+    var at = start
+    while (at < start + n) {
+      buf.clear().limit(math.min(buf.capacity.toLong, start + n - at).toInt)
+      val k = ch.read(buf, at)
+      if (k < 0) throw new java.io.EOFException(s"file shrank below ${start + n} bytes")
+      out.write(buf.array, 0, k)
+      at += k
     }
   }
 
@@ -659,4 +700,39 @@ final class LocalSharingServer(
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+}
+
+object LocalSharingServer {
+  // TCP_NODELAY for every server socket this JVM accepts. The JDK reads
+  // `sun.net.httpserver.nodelay` ONCE per JVM, when its ServerConfig class
+  // is first initialised — that is, at the first `HttpServer.create`
+  // anywhere in the process. Setting it here, in this object's
+  // initialiser, runs before `newHttpServer`'s first create, so every
+  // LocalSharingServer gets it; an HttpServer created by other code
+  // before this object is touched would fix the flag at its default
+  // (off). A value the user set explicitly is left alone.
+  if (System.getProperty("sun.net.httpserver.nodelay") == null)
+    System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  private def newHttpServer(): HttpServer =
+    HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+
+  /** A single `bytes=` range of a `len`-byte file as inclusive
+    * (start, end), or None when it is not satisfiable (a `416`):
+    * `a-b` (end clamped to EOF), `a-`, and the suffix form `-n` (the
+    * last n bytes). A start at or past EOF, a start after the end, an
+    * empty suffix and anything unparseable are all unsatisfiable. */
+  private def parseRange(header: String, len: Long): Option[(Long, Long)] =
+    header.stripPrefix("bytes=").split("-", 2) match {
+      case Array("", n) =>
+        n.toLongOption.filter(k => k > 0 && len > 0)
+          .map(k => (math.max(0L, len - k), len - 1))
+      case Array(a, b) =>
+        for {
+          start <- a.toLongOption
+          end <- if (b.isEmpty) Some(len - 1) else b.toLongOption
+          if start >= 0 && start < len && start <= end
+        } yield (start, math.min(end, len - 1))
+      case _ => None
+    }
 }
