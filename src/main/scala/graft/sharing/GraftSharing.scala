@@ -1,11 +1,12 @@
 package graft.sharing
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
 import graft.sharing.fs.SignedHttpFileSystem
+import graft.sharing.streaming.GraftCdfStream
 
 /** Connection-string entry point:
   * `GraftSharing.read(spark, "<profile-path>#<share>.<schema>.<table>")`
@@ -18,10 +19,12 @@ import graft.sharing.fs.SignedHttpFileSystem
   *    all-files-in-one-partition scan, src/datasource/scan.rs:77);
   *  - executors: Spark's vectorized parquet reader over HTTP Range
   *    reads; projection/filter pushdown reach the parquet scan natively;
-  *  - partition values (strings outside the files) become constant
-  *    columns cast to the schema type per partition-value group, empty
-  *    string ⇒ NULL (src/datasource/scan.rs:191-229) — Catalyst folds
-  *    the per-group union back into parallel scans.
+  *  - partition values (strings outside the files) ride in each path as
+  *    hive-style `k=v` segments (empty string ⇒ NULL,
+  *    src/datasource/scan.rs:191-229), so Spark's partition discovery
+  *    types them from the table schema and a whole listing is ONE
+  *    parquet scan — the same path encoding as the catalog and the CDF
+  *    stream ([[SignedHttpFileSystem.encodeAll]]).
   */
 object GraftSharing {
 
@@ -49,29 +52,52 @@ object GraftSharing {
       versionAsOf: Option[Long] = None): DataFrame = {
     val schemaForHints = DeltaSchema.fromSchemaString(
       client.getTableMetadata(table, versionAsOf)._2.schemaString)
-    // translate ONCE; the wire hint and the stats pruning below derive
-    // from the same Seq[Op] so they can never drift apart
-    val ops = filters.flatMap(f => PredicateHints.fromFilter(f, schemaForHints))
-    val (protocol, metadata, files) = client.getTableData(table,
-      PredicateHints.toHintJson(ops), limitHint, versionAsOf)
-    if (protocol.minReaderVersion > 1)
-      throw DeltaSharingException.other(
-        s"unsupported minReaderVersion ${protocol.minReaderVersion}")
+    val (_, metadata, files) = listFiles(client, table,
+      filters.flatMap(f => PredicateHints.fromFilter(f, schemaForHints)),
+      limitHint, versionAsOf)
     val schema = DeltaSchema.fromSchemaString(metadata.schemaString)
-    // Driver-side file skipping on per-file stats (SURVEY §4 improvement
-    // over the reference, which parses stats and ignores them): drop
-    // files whose min/max envelope provably excludes every pushed
-    // filter BEFORE any partition is planned. Purely an optimization —
-    // the engine-side residual filter still runs either way.
-    dataFrameForFiles(spark, schema, metadata.partitionColumns,
-      StatsPruning.prune(files, ops))
+    if (files.isEmpty) {
+      import scala.jdk.CollectionConverters._
+      return spark.createDataFrame(
+        Seq.empty[org.apache.spark.sql.Row].asJava, schema)
+    }
+    scan(spark, schema,
+      SignedHttpFileSystem.encodeAll(metadata.partitionColumns,
+        files.map(_ -> Nil)),
+      schema.fieldNames.toSeq)
+  }
+
+  /** The one listing step of every snapshot read: `ops` become both the
+    * wire hint and the driver-side stats skipping (dropping files whose
+    * min/max envelope excludes a pushed filter — purely an optimization,
+    * the residual filter still runs), so the two never drift apart.
+    * Returns the hint sent, the metadata and the kept files. */
+  private[sharing] def listFiles(client: DeltaSharingClient, table: TableRef,
+      ops: Seq[PredicateHints.Op], limitHint: Option[Long],
+      versionAsOf: Option[Long]): (Option[String], Metadata, Seq[FileAction]) = {
+    val hints = PredicateHints.toHintJson(ops)
+    val (_, metadata, files) =
+      client.getTableData(table, hints, limitHint, versionAsOf)
+    (hints, metadata, StatsPruning.prune(files, ops))
+  }
+
+  /** One v1 parquet relation over encoded paths: `readSchema` types the
+    * path segments as partition columns; `columns` fixes the output
+    * order. */
+  private def scan(spark: SparkSession, readSchema: StructType,
+      encoded: (Seq[String], String), columns: Seq[String]): DataFrame = {
+    SignedHttpFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val (paths, base) = encoded
+    spark.read.schema(readSchema).option("basePath", base)
+      .parquet(paths: _*).select(columns.map(col): _*)
   }
 
   /** Read the change data feed between versions as a DataFrame with
     * `_change_type` / `_commit_version` / `_commit_timestamp` metadata
-    * columns alongside the data — CDC-consumer shape. Each (type,
-    * version) group scans its files in parallel; Catalyst folds the
-    * per-group union back into concurrent scans. */
+    * columns after the table's columns — CDC-consumer shape. The three
+    * columns ride in each change file's path next to its partition
+    * values, so the whole feed is ONE parquet scan whatever the number
+    * of versions. */
   def readChanges(spark: SparkSession, client: DeltaSharingClient,
       table: TableRef, startingVersion: Long,
       endingVersion: Option[Long] = None): DataFrame =
@@ -95,20 +121,14 @@ object GraftSharing {
       fetched: (Protocol, Metadata, Seq[Actions.ChangeAction]),
       boundsForError: String): DataFrame = {
     val (_, metadata, changes) = fetched
-    val schema = DeltaSchema.fromSchemaString(metadata.schemaString)
-    val groups = changes.groupBy(c => (c.changeType, c.version, c.timestamp))
-    val parts = groups.toSeq.sortBy(g => (g._1._2, g._1._1)).map {
-      case ((changeType, version, ts), groupChanges) =>
-        dataFrameForFiles(spark, schema, metadata.partitionColumns,
-          groupChanges.map(_.file))
-          .withColumn("_change_type", lit(changeType))
-          .withColumn("_commit_version", lit(version))
-          .withColumn("_commit_timestamp", lit(ts.orNull).cast("long"))
-    }
-    if (parts.isEmpty)
+    if (changes.isEmpty)
       throw DeltaSharingException.other(
         s"no changes for $table in $boundsForError")
-    parts.reduce(_ unionAll _)
+    val schema = DeltaSchema.fromSchemaString(metadata.schemaString)
+    scan(spark, GraftCdfStream.cdfSchema(metadata),
+      GraftCdfStream.encodeChanges(metadata, changes),
+      schema.fieldNames.toSeq ++ Seq(GraftCdfStream.ChangeTypeCol,
+        GraftCdfStream.VersionCol, GraftCdfStream.TimestampCol))
   }
 
   /** Tail the change data feed as a STREAM: each micro-batch covers the
@@ -202,40 +222,5 @@ object GraftSharing {
         .select(dataCols.map(col): _*)
       acc.unionAll(added).exceptAll(removed)
     }
-  }
-
-  /** Build the DataFrame for a listed file set. */
-  def dataFrameForFiles(spark: SparkSession, schema: StructType,
-      partitionColumns: Seq[String], files: Seq[FileAction]): DataFrame = {
-    SignedHttpFileSystem.register(spark.sparkContext.hadoopConfiguration)
-    val partSet = partitionColumns.toSet
-    val dataSchema = StructType(schema.fields.filterNot(f => partSet(f.name)))
-
-    if (files.isEmpty) {
-      import scala.jdk.CollectionConverters._
-      return spark.createDataFrame(Seq.empty[org.apache.spark.sql.Row].asJava, schema)
-    }
-
-    def pathOf(f: FileAction): String =
-      SignedHttpFileSystem.encode(f.url, f.size)
-
-    // One scan per distinct partition-value combination; the constant
-    // partition columns are appended with the typed cast (empty ⇒ NULL,
-    // matching reference deserialize_partition_values, scan.rs:191-229).
-    val groups = files.groupBy(_.partitionValues).toSeq
-    val parts = groups.map { case (pv, groupFiles) =>
-      var df = spark.read.schema(dataSchema)
-        .parquet(groupFiles.map(pathOf): _*)
-      partitionColumns.foreach { pc =>
-        val fieldType = schema(pc).dataType
-        val raw = pv.getOrElse(pc, "")
-        val value =
-          if (raw.isEmpty) lit(null).cast(fieldType)
-          else lit(raw).cast(fieldType)
-        df = df.withColumn(pc, value)
-      }
-      df.select(schema.fieldNames.map(col).toSeq: _*)
-    }
-    parts.reduce(_ unionAll _)
   }
 }

@@ -120,31 +120,20 @@ final class GraftScanBuilder(client: DeltaSharingClient, ref: TableRef,
     * the delegating parquet scan builder and replay recorded pushdowns. */
   private def freshDelegate(): ParquetScanBuilder = {
     SignedHttpFileSystem.register(spark.sparkContext.hadoopConfiguration)
-    // translate ONCE; wire hint and stats pruning derive from the same
-    // Seq[Op] so they can never drift apart
-    val hintOps = catalystFilters.flatMap(
-      PredicateHints.fromCatalyst(_, fullSchema))
-    val hints = PredicateHints.toHintJson(hintOps)
+    val (hints, meta, files) = GraftSharing.listFiles(client, ref,
+      catalystFilters.flatMap(PredicateHints.fromCatalyst(_, fullSchema)),
+      limitHint, versionAsOf)
     sentPredicateHints = hints
-    val (_, meta, rawFiles) =
-      client.getTableData(ref, hints, limitHint, versionAsOf)
-    // driver-side stats skipping on the same predicate AST the hint
-    // carries (files the server listed anyway but whose min/max envelope
-    // excludes every filter) — the residual FilterExec still re-filters
-    val files = StatsPruning.prune(rawFiles, hintOps)
     partCols = meta.partitionColumns
-    val uid = java.util.UUID.randomUUID().toString.take(12)
-    plannedFiles = files.map { f =>
-      SignedHttpFileSystem.encode(f.url, f.size,
-        partCols.map(pc => pc -> f.partitionValues.getOrElse(pc, "")), uid,
-        refresh = profilePath.map(pp => SignedHttpFileSystem.RefreshSpec(
-          pp, ref.share, ref.schema, ref.name, f.id, versionAsOf))) ->
-        f.partitionValues
-    }
+    val (paths, base) = SignedHttpFileSystem.encodeAll(partCols,
+      files.map(_ -> Nil),
+      f => profilePath.map(pp => SignedHttpFileSystem.RefreshSpec(
+        pp, ref.share, ref.schema, ref.name, f.id, versionAsOf)))
+    plannedFiles = paths.zip(files.map(_.partitionValues))
     // common synthetic base so hive-style k=v segments become partitions
     val optsWithBase = {
       val m = new java.util.HashMap[String, String](options)
-      m.put("basePath", SignedHttpFileSystem.basePath(uid))
+      m.put("basePath", base)
       new CaseInsensitiveStringMap(m)
     }
     plannedOpts = Some(optsWithBase)
@@ -195,7 +184,8 @@ final class GraftScanBuilder(client: DeltaSharingClient, ref: TableRef,
   //    ignore a recorded filter);
   //  - group-by columns are top-level partition columns (their exact
   //    values travel as per-file partitionValues — empty string ⇒ NULL,
-  //    the materialization rule of GraftSharing.dataFrameForFiles);
+  //    the rule the scan path applies through the hive default-partition
+  //    segment of SignedHttpFileSystem.encodeAll);
   //  - COUNT(*) sums numRecords; COUNT(col) needs per-file
   //    nullCount[col] (data column: numRecords − nullCount; partition
   //    column: 0 when the file's value is NULL, else numRecords);
@@ -269,7 +259,8 @@ final class GraftScanBuilder(client: DeltaSharingClient, ref: TableRef,
     val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
     def typedValue(raw: String, dt: org.apache.spark.sql.types.DataType)
         : Any = {
-      // the SAME cast rule as the row path (lit(raw).cast(dt)); a
+      // a Catalyst cast of the raw string, which agrees with the scan's
+      // partition discovery on Delta's canonical value strings; a
       // malformed value throws (ANSI) or nulls -- both refuse
       val v = Cast(Literal(UTF8String.fromString(raw),
         org.apache.spark.sql.types.StringType), dt, tz)
@@ -371,8 +362,8 @@ final class GraftScanBuilder(client: DeltaSharingClient, ref: TableRef,
           case _ => throw Refuse()
         }
 
-      // typed group value via the SAME cast rule the row path uses
-      // (empty => NULL, the materialization rule)
+      // typed group value via the same cast (empty => NULL, as the
+      // scan reads it)
       def groupValue(raw: String, sf: StructField): Any =
         if (raw.isEmpty) null else typedValue(raw, sf.dataType)
 

@@ -176,10 +176,29 @@ object SignedHttpFileSystem {
     }
   }
 
-  def basePath(tableUid: String): String = s"graftshare:///t/$tableUid"
+  /** The one way a listing becomes scan paths. Every file goes under one
+    * fresh synthetic table base; its segments are the table's partition
+    * values in `partitionColumns` order (missing ⇒ empty ⇒ NULL), then
+    * its `extra` segments (the CDF columns of a change file). Returns the
+    * paths and the base to pass as `basePath`, so Spark's partition
+    * discovery types every segment as a partition column of ONE scan. */
+  def encodeAll(partitionColumns: Seq[String],
+      files: Seq[(graft.sharing.FileAction, Seq[(String, String)])],
+      refresh: graft.sharing.FileAction => Option[RefreshSpec] = _ => None)
+      : (Seq[String], String) = {
+    val uid = java.util.UUID.randomUUID().toString.take(12)
+    val paths = files.map { case (f, extra) =>
+      encode(f.url, f.size,
+        partitionColumns.map(pc => pc -> f.partitionValues.getOrElse(pc, "")) ++
+          extra, uid, refresh(f))
+    }
+    (paths, s"graftshare:///t/$uid")
+  }
 
-  /** Hive-compatible path-name escaping (subset: enough for values that
-    * contain separators; matches PartitioningUtils' unescape). */
+  /** Hive path-name escaping: the character set of Spark's
+    * `ExternalCatalogUtils.escapePathName` (control characters, DEL and
+    * the punctuation below), which partition discovery reverses with
+    * `unescapePathName`. */
   private def hiveEscape(v: String): String = v.flatMap { c =>
     if (c < ' ' || "\"#%'*/:=?\\{[]^".contains(c)) f"%%${c.toInt}%02X"
     else c.toString

@@ -114,6 +114,16 @@ object GraftCdfStream {
       StructField(VersionCol, LongType, nullable = false),
       StructField(TimestampCol, LongType, nullable = true)))
   }
+
+  /** Change files → encoded paths and their `basePath`: the CDF columns
+    * ride as path segments after the table's partition values, in
+    * [[cdfSchema]] order (a missing timestamp ⇒ NULL). */
+  def encodeChanges(metadata: Metadata, changes: Seq[Actions.ChangeAction])
+      : (Seq[String], String) =
+    SignedHttpFileSystem.encodeAll(metadata.partitionColumns,
+      changes.map(c => c.file -> Seq(ChangeTypeCol -> c.changeType,
+        VersionCol -> c.version.toString,
+        TimestampCol -> c.timestamp.fold("")(_.toString))))
 }
 
 final class GraftCdfStreamTable(client: DeltaSharingClient, ref: TableRef,
@@ -222,19 +232,9 @@ final class GraftCdfMicroBatchStream(client: DeltaSharingClient,
     if (changes.isEmpty) { plannedFactory = Some(EmptyBatchFactory); return Array.empty }
 
     SignedHttpFileSystem.register(spark.sparkContext.hadoopConfiguration)
-    val partCols = meta.partitionColumns
-    val uid = java.util.UUID.randomUUID().toString.take(12)
-    val paths = changes.map { c =>
-      val segments =
-        partCols.map(pc => pc -> c.file.partitionValues.getOrElse(pc, "")) ++
-          Seq(GraftCdfStream.ChangeTypeCol -> c.changeType,
-            GraftCdfStream.VersionCol -> c.version.toString,
-            GraftCdfStream.TimestampCol ->
-              c.timestamp.map(_.toString).getOrElse(""))
-      SignedHttpFileSystem.encode(c.file.url, c.file.size, segments, uid)
-    }
+    val (paths, base) = GraftCdfStream.encodeChanges(meta, changes)
     val opts = new java.util.HashMap[String, String]()
-    opts.put("basePath", SignedHttpFileSystem.basePath(uid))
+    opts.put("basePath", base)
     val csMap = new CaseInsensitiveStringMap(opts)
     val table = ParquetTable(s"$ref@changes[$from,$to]", spark, csMap, paths,
       Some(cdfSchema), classOf[ParquetFileFormat])

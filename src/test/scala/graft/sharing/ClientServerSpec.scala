@@ -207,6 +207,9 @@ class ClientServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       files, minReaderVersion = 3))
     assert(intercept[DeltaSharingException](
       client.getTableMetadata(tV3)).kind == "UNSUPPORTED_TABLE_FEATURE")
+    // readTable reaches the same gate through its metadata call
+    assert(intercept[DeltaSharingException](GraftSharing.readTable(
+      graft.SparkTestBase.session, client, tV3)).kind == "UNSUPPORTED_TABLE_FEATURE")
     // the plain parquet table still reads fine through the same client
     assert(client.getTableData(
       TableRef("share1", "schema1", "lineitem"))._3.nonEmpty)

@@ -1,5 +1,7 @@
 package graft.sharing
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
 import org.apache.spark.sql.functions.{col, count, lit, max, min}
 import org.apache.spark.sql.sources.{EqualTo, LessThan}
 import org.scalatest.BeforeAndAfterAll
@@ -111,6 +113,101 @@ class SharingEndToEndSpec extends SparkTestBase with BeforeAndAfterAll {
       assert(byKey(Some(1)) == n1)
       assert(byKey(None) == n0) // the empty-string file surfaces as NULL
     } finally partServer.stop()
+  }
+
+  /** nation split into one parquet file per region key, without the
+    * region column. File i is served with the string partition value
+    * `values(i)` for column `p`, which lives only outside the files.
+    * Version 1 adds every file; version 2 removes file 0 and re-adds it.
+    * Returns the started server and what a correct reader returns for
+    * each file: its raw rows plus `p` ("" ⇒ NULL). */
+  private def partitionedNation(share: String, values: Seq[String])
+      : (LocalSharingServer, Seq[DataFrame]) = {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory("graft-pv").toString
+    val nation = spark.read.parquet(s"$sf0001/nation.parquet")
+    val files = values.indices.map { i =>
+      nation.filter(col("n_regionkey") === i).drop("n_regionkey")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/g$i")
+      java.nio.file.Files.list(java.nio.file.Paths.get(s"$dir/g$i"))
+        .iterator().asScala.filter(_.toString.endsWith(".parquet")).next()
+    }
+    val expected = files.zip(values).map { case (f, v) =>
+      spark.read.parquet(f.toString).withColumn("p",
+        if (v.isEmpty) lit(null).cast("string") else lit(v))
+    }
+    val srv = new LocalSharingServer()
+    val served = files.zip(values).map { case (f, v) =>
+      srv.ServedFile(f, Map("p" -> v)) }
+    srv.addTable(share, "sc", srv.TableDef("t",
+      DeltaSchema.toSchemaString(expected.head.schema),
+      partitionColumns = Seq("p"), files = served, version = 2L,
+      changes = served.map(f => srv.ChangeEntry(1L, "add", f, 1700000001000L)) ++
+        Seq(srv.ChangeEntry(2L, "remove", served.head, 1700000002000L),
+          srv.ChangeEntry(2L, "add", served.head, 1700000002000L))))
+    srv.start()
+    (srv, expected)
+  }
+
+  private def assertSameRows(got: DataFrame, want: DataFrame): Unit = {
+    assert(got.schema.fieldNames.toSeq == want.schema.fieldNames.toSeq)
+    assert(got.count() == want.count())
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      s"rows differ:\n${got.exceptAll(want).collect().mkString("\n")}")
+  }
+
+  /** The CDF rows a correct reader returns for [[partitionedNation]]. */
+  private def expectedChanges(perFile: Seq[DataFrame]): DataFrame = {
+    def tag(df: DataFrame, kind: String, v: Long, ts: Long) =
+      df.withColumn("_change_type", lit(kind))
+        .withColumn("_commit_version", lit(v))
+        .withColumn("_commit_timestamp", lit(ts))
+    (perFile.map(tag(_, "add", 1L, 1700000001000L)) ++ Seq(
+      tag(perFile.head, "remove", 2L, 1700000002000L),
+      tag(perFile.head, "add", 2L, 1700000002000L))).reduce(_ unionAll _)
+  }
+
+  test("one listing plans one parquet scan: 3 partition values, a 2-version change feed") {
+    val (srv, perFile) = partitionedNation("width", Seq("x", "y", ""))
+    try {
+      val c = new DeltaSharingClient(Profile.fromJson(srv.profileJson))
+      val ref = TableRef("width", "sc", "t")
+      def assertOneScan(df: DataFrame): Unit = {
+        val p = df.queryExecution.sparkPlan
+        val scans = p.collect { case s: FileSourceScanExec => s }
+        assert(scans.size == 1, s"expected one parquet scan:\n$p")
+        assert(p.collect { case u: UnionExec => u }.isEmpty, s"Union in plan:\n$p")
+      }
+      val table = GraftSharing.readTable(spark, c, ref)
+      assertOneScan(table)
+      assertSameRows(table, perFile.reduce(_ unionAll _))
+      val changes = GraftSharing.readChanges(spark, c, ref, 1L, Some(2L))
+      assertOneScan(changes)
+      assertSameRows(changes, expectedChanges(perFile))
+    } finally srv.stop()
+  }
+
+  test("partition values that need path escaping round-trip on every read path") {
+    val values = Seq("a/b", "k=v", "50%", "x y", "")
+    val (srv, perFile) = partitionedNation("escaped", values)
+    try {
+      val c = new DeltaSharingClient(Profile.fromJson(srv.profileJson))
+      val ref = TableRef("escaped", "sc", "t")
+      val want = perFile.reduce(_ unionAll _)
+      val table = GraftSharing.readTable(spark, c, ref)
+      assertSameRows(table, want)
+      assert(table.filter(col("p").isNull).count() == perFile.last.count())
+      assertSameRows(GraftSharing.readChanges(spark, c, ref, 1L, Some(2L)),
+        expectedChanges(perFile))
+      spark.conf.set("spark.sql.catalog.escaped",
+        "graft.sharing.catalog.GraftCatalog")
+      spark.conf.set("spark.sql.catalog.escaped.profile.json", srv.profileJson)
+      assertSameRows(spark.sql("SELECT * FROM escaped.sc.t"), want)
+      // a filter on an escaped value selects exactly that file's rows
+      values.zip(perFile).filter(_._1.nonEmpty).foreach { case (v, f) =>
+        assertSameRows(spark.table("escaped.sc.t").filter(col("p") === v), f)
+      }
+    } finally srv.stop()
   }
 
   test("per-file stats prune the scan to matching files only") {
