@@ -819,10 +819,12 @@ object ConnectorQueries {
 
     // CDF snapshot reconstruction: v1 base ∪ v2-adds exceptAll
     // v3-removes must collapse to exactly the added slice — which is
-    // also nation_cdf's CURRENT file list, so the fold provably agrees
-    // with a plain scan of the table at its version (multiset fold per
-    // version, GraftSharing.applyChanges). The v1 base is the plain
-    // shared `nation` table, read through the connector too.
+    // also nation_cdf's CURRENT file list, so the reconciliation provably
+    // agrees with a plain scan of the table at its version
+    // (GraftSharing.applyChanges: base and feed in one union, one hash
+    // exchange on the row identity, closed-form multiset counts per row).
+    // The v1 base is the plain shared `nation` table, read through the
+    // connector too.
     QueryDef.sql(
       "connector_cdf_snapshot",
       """SELECT n_nationkey, n_name, n_regionkey FROM nation

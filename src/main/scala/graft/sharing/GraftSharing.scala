@@ -156,54 +156,43 @@ object GraftSharing {
     * plan — at hundreds of commits the analyzer/lineage cost alone
     * becomes a driver-side bottleneck. Instead, note that per distinct
     * row value the fold is the queue recursion
-    * `c_v = max(c_{v-1} + adds_v − removes_v, 0)`, whose closed form
-    * over per-version deltas δ with prefix sums S is
-    * `c_final = S_n + max(base_count, −min_k S_k)`. One aggregation
-    * keyed on row identity + `_commit_version`, one `array_sort` over
-    * the (tiny) per-row version list, and a null-safe full-outer join
-    * against base counts compute exactly that — a fixed number of
-    * shuffles at any history length, all distributed on row identity. */
+    * `c_k = max(c_{k-1} + δ_k, 0)` from `c = 0`, with the base count as
+    * the first step δ_0 (at version −1, before every commit version,
+    * which is ≥ 0) and each version's net delta after it. Over the
+    * prefix sums S_k its closed form is `n = S_last − min(0, min_k S_k)`.
+    *
+    * Base rows (+1 each at version −1) and change rows (±1 at their
+    * version) enter one union, which is hash-partitioned ONCE on the row
+    * identity; the per-(row, version) sum and the per-row version-sorted
+    * delta list both reuse that partitioning, so the plan has a single
+    * exchange and no join at any history length. The row travels as one
+    * struct column `r`, so the table's own column names can never
+    * collide with the internal ones. */
   def applyChanges(base: DataFrame, changes: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    val dataCols = base.columns.toSeq
-    // (row value, version) → net delta, then per row value the
-    // version-ascending delta list (array_sort orders structs by their
-    // first field, `v` — unique per row after the two-key groupBy)
-    val perRow = changes
-      .filter(col("_change_type").isin("add", "remove"))
-      .select(dataCols.map(col) :+ col("_commit_version").as("_v") :+
-        when(col("_change_type") === "add", 1L).otherwise(-1L).as("_d"): _*)
-      .groupBy((dataCols :+ "_v").map(col): _*)
-      .agg(sum(col("_d")).as("_delta"))
-      .groupBy(dataCols.map(col): _*)
-      .agg(array_sort(collect_list(struct(col("_v").as("v"),
-        col("_delta").as("d")))).as("_ds"))
-    val baseCounts = base.groupBy(dataCols.map(col): _*)
-      .agg(count(lit(1)).as("_b"))
-    // null-safe join: CDF rows with NULL data columns must line up with
-    // equal base rows, exactly as exceptAll treats NULL = NULL
-    val joinCond = dataCols.map(c => baseCounts(c) <=> perRow(c))
-      .reduce(_ && _)
-    baseCounts.join(perRow, joinCond, "full_outer")
-      .select(
-        dataCols.map(c => coalesce(baseCounts(c), perRow(c)).as(c)) ++ Seq(
-          coalesce(col("_b"), lit(0L)).as("_b"),
-          coalesce(col("_ds"),
-            array().cast("array<struct<v:bigint,d:bigint>>")).as("_ds")): _*)
-      // running (prefix sum, running min) over the version-ordered
-      // deltas; including S_0 = 0 in the min is harmless since the base
-      // count is never negative
-      .withColumn("_acc",
-        aggregate(col("_ds"), struct(lit(0L).as("s"), lit(0L).as("m")),
-          (acc, x) => {
-            val s2 = acc.getField("s") + x.getField("d")
-            struct(s2.as("s"), least(acc.getField("m"), s2).as("m"))
-          }))
-      .withColumn("_n",
-        col("_acc.s") + greatest(col("_b"), -col("_acc.m")))
-      .filter(col("_n") > 0)
-      .withColumn("_i", explode(sequence(lit(1L), col("_n"))))
-      .select(dataCols.map(col): _*)
+    val row = struct(base.columns.map(c =>
+      col(s"`${c.replace("`", "``")}`")).toSeq: _*).as("r")
+    val steps = base.select(row, lit(-1L).as("v"), lit(1L).as("d"))
+      .union(changes.filter(col("_change_type").isin("add", "remove"))
+        .select(row, col("_commit_version").as("v"),
+          when(col("_change_type") === "add", 1L).otherwise(-1L).as("d")))
+    // repartition on r alone: the two-key groupBy would otherwise plan its
+    // own exchange on (r, v) and the per-row groupBy a second one on r.
+    // array_sort orders the structs by their first field, v — unique per
+    // row after the two-key groupBy
+    steps.repartition(col("r"))
+      .groupBy("r", "v").agg(sum("d").as("d"))
+      .groupBy("r").agg(aggregate(
+        array_sort(collect_list(struct(col("v"), col("d")))),
+        struct(lit(0L).as("s"), lit(0L).as("m")),
+        (acc, x) => {
+          val s2 = acc.getField("s") + x.getField("d")
+          struct(s2.as("s"), least(acc.getField("m"), s2).as("m"))
+        }).as("acc"))
+      // n = S_last − min(0, min_k S_k) ≥ 0; array_repeat of 0 is empty
+      .select(explode(array_repeat(col("r"),
+        (col("acc.s") - col("acc.m")).cast("int"))).as("r"))
+      .select("r.*")
   }
 
   /** The per-version `unionAll`/`exceptAll` fold — the readable semantic

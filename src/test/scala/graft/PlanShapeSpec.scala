@@ -111,9 +111,24 @@ class PlanShapeSpec extends SparkTestBase {
       .toDF("_change_type", "_commit_version", "k", "x")
       .withColumn("_commit_timestamp", org.apache.spark.sql.functions.lit(0L))
       .select("k", "x", "_change_type", "_commit_version", "_commit_timestamp")
-    val p = graft.sharing.GraftSharing.applyChanges(base, feed)
-      .queryExecution.optimizedPlan.toString
+    val df = graft.sharing.GraftSharing.applyChanges(base, feed)
+    val p = df.queryExecution.optimizedPlan.toString
     assert(!p.contains("Except"), s"fold shape leaked back in:\n$p")
+    // base and feed reconcile in ONE hash exchange on the row identity:
+    // both aggregations reuse it, and no join re-shuffles either side
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val phys = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    val exchanges = phys.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    val joins = phys.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+    }
+    assert(exchanges.size == 1 && joins.isEmpty,
+      s"expected one exchange and no join:\n$phys")
   }
 
   test("weighted sample: global top-k plans as TakeOrdered, never a full sort") {

@@ -151,6 +151,52 @@ class ChangesSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(fast.exceptAll(oracle).count() == 0)
     assert(oracle.exceptAll(fast).count() == 0)
 
+    // 40 seeded random (base, feed) pairs over a 4-row domain with NULLs
+    // in both identity columns. The domain is small enough that duplicate
+    // base rows, add + remove of one row in one version, over-removal and
+    // re-adds all occur; a per-row replay of the fold records which did.
+    val domain = Seq[(Option[String], Option[Int])]((Some("a"), Some(1)),
+      (Some("a"), None), (None, Some(2)), (None, None))
+    val seen = scala.collection.mutable.Set.empty[String]
+    (1 to 40).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def pick() = domain(rnd.nextInt(domain.size))
+      val baseRows = Seq.fill(rnd.nextInt(6))(pick())
+      val feedRows = (0L until rnd.nextInt(5).toLong).flatMap { v =>
+        Seq.fill(1 + rnd.nextInt(4))(
+          (if (rnd.nextBoolean()) "add" else "remove", v, pick()))
+      }
+      if ((baseRows ++ feedRows.map(_._3))
+          .exists(r => r._1.isEmpty || r._2.isEmpty)) seen += "null"
+      if (baseRows.distinct.size < baseRows.size) seen += "dup-base"
+      val counts = scala.collection.mutable.Map
+        .empty[(Option[String], Option[Int]), Int].withDefaultValue(0)
+      baseRows.foreach(r => counts(r) += 1)
+      val removedToZero = scala.collection.mutable.Set
+        .empty[(Option[String], Option[Int])]
+      feedRows.groupBy(_._2).toSeq.sortBy(_._1).foreach { case (_, evs) =>
+        evs.groupBy(_._3).foreach { case (r, es) =>
+          val adds = es.count(_._1 == "add")
+          val removes = es.size - adds
+          if (adds > 0 && removes > 0) seen += "add+remove"
+          if (adds > 0 && removedToZero(r)) seen += "re-add"
+          if (counts(r) + adds < removes) seen += "over-removal"
+          counts(r) = math.max(counts(r) + adds - removes, 0)
+          if (removes > 0 && counts(r) == 0) removedToZero += r
+        }
+      }
+      val b = baseRows.toDF("k", "x")
+      val f = feedRows.map { case (t, v, (k, x)) => (k, x, t, v, 0L) }
+        .toDF("k", "x", "_change_type", "_commit_version", "_commit_timestamp")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toString).sorted.toSeq
+      assert(rows(GraftSharing.applyChanges(b, f)) ==
+        rows(GraftSharing.applyChangesFold(b, f)),
+        s"seed $seed: base=$baseRows feed=$feedRows")
+    }
+    assert(seen == Set("null", "dup-base", "add+remove", "over-removal",
+      "re-add"), s"random cases missed a shape: $seen")
+
     // plan depth must NOT grow with the version count: the fold's
     // Union/Except chain is gone, and a 2-version feed and a 5-version
     // feed optimize to the same number of plan nodes
@@ -166,6 +212,31 @@ class ChangesSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(shortExcepts == 0 && longExcepts == 0)
     assert(longNodes == shortNodes,
       s"plan grew with versions: $shortNodes -> $longNodes nodes")
+  }
+
+  test("applyChanges is immune to data columns named like its internals") {
+    // a table's own columns share no namespace with the reconciliation's
+    // bookkeeping: equal to the fold, whatever the data columns are named
+    val spark2 = spark
+    import spark2.implicits._
+    val names = Seq("_v", "_d", "_n", "_i", "r", "v", "d", "acc")
+    val base = Seq((1, 2, 3, 4, 5, 6, 7, 8), (1, 2, 3, 4, 5, 6, 7, 8),
+      (2, 2, 2, 2, 2, 2, 2, 2)).toDF(names: _*)
+    val feed = Seq(
+      ("remove", 1L, (1, 2, 3, 4, 5, 6, 7, 8)),
+      ("add", 1L, (9, 9, 9, 9, 9, 9, 9, 9)),
+      ("add", 2L, (1, 2, 3, 4, 5, 6, 7, 8)),
+      ("remove", 2L, (2, 2, 2, 2, 2, 2, 2, 2)))
+      .map { case (t, v, (a, b, c, d, e, f, g, h)) =>
+        (a, b, c, d, e, f, g, h, t, v, 0L) }
+      .toDF(names ++ Seq("_change_type", "_commit_version",
+        "_commit_timestamp"): _*)
+    val fast = GraftSharing.applyChanges(base, feed)
+    val oracle = GraftSharing.applyChangesFold(base, feed)
+    assert(fast.columns.toSeq == names)
+    assert(fast.collect().map(_.toString).sorted.toSeq ==
+      oracle.collect().map(_.toString).sorted.toSeq)
+    assert(fast.count() == 3)
   }
 
   test("format reader accepts a versionAsOf option") {
