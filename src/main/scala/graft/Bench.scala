@@ -296,9 +296,14 @@ object Bench {
     }
   }
 
+  /** The plan Bench times for `name`: its raw variant, else the gated
+    * query. */
+  private[graft] def benchPlan(name: String)
+      : Option[(SparkSession, String) => org.apache.spark.sql.DataFrame] =
+    rawBench(name).orElse(SparkEntry.queries.get(name))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     // Wall-clock deadline (r14 verdict ask #1): the driver's bench
     // invocation runs under an external wall-clock cap, and the old
@@ -329,7 +334,7 @@ object Bench {
     // JVM) and wait for a quiet window rather than timing into a storm.
     // If the host never quiets down, run anyway but stamp the override
     // into the artifact so the number is never mistaken for a clean one.
-    def loadAvg1(): Double =
+    def loadAvg(): Double =
       try java.nio.file.Files
         .readString(java.nio.file.Paths.get("/proc/loadavg"))
         .split(" ")(0).toDouble
@@ -338,19 +343,19 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_MAX_LOAD", "2.0").toDouble
     val loadTries =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_LOAD_TRIES", "10").toInt
-    val loadT0 = loadAvg1()
+    val loadT0 = loadAvg()
     var waits = 0
     // gate waiting may consume at most a third of the deadline — a
     // never-quiet host must still leave time for the passes themselves
-    while (loadAvg1() > maxLoad && waits < loadTries &&
+    while (loadAvg() > maxLoad && waits < loadTries &&
         elapsedS < deadlineS / 3) {
       System.err.println(
-        f"[bench] host load ${loadAvg1()}%.2f > $maxLoad%.2f — waiting 30 s " +
+        f"[bench] host load ${loadAvg()}%.2f > $maxLoad%.2f — waiting 30 s " +
           s"(${waits + 1}/$loadTries)")
       Thread.sleep(30000)
       waits += 1
     }
-    val loadAfterGate = loadAvg1()
+    val loadAfterGate = loadAvg()
     val loadGate =
       // unreadable /proc/loadavg reads as -1.0, which would otherwise
       // satisfy <= maxLoad and stamp "ok" for a host whose load was
@@ -360,16 +365,8 @@ object Bench {
       else if (loadAfterGate <= maxLoad && waits == 0) "ok"
       else if (loadAfterGate <= maxLoad) s"ok_after_${waits * 30}s"
       else s"override_still_loaded_after_${waits * 30}s"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(GraftSession.cpus)
 
-    val qs = SparkEntry.queries
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
 
     // r15 verdict #2: cross-query shared frames (edge graph, trained
@@ -403,7 +400,7 @@ object Bench {
     headline.foreach { name =>
       // deadline-guarded: a cold JVM on a loaded host can spend minutes
       // here; partially-warmed timings beat an erased artifact
-      if (!overDeadline) rawBench(name).orElse(qs.get(name)).foreach { fn =>
+      if (!overDeadline) benchPlan(name).foreach { fn =>
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case _: Throwable => () }
         CacheRegistry.releaseAll()
@@ -431,11 +428,6 @@ object Bench {
     // (32 busy executor threads ⇒ ~32 is self-load); the signal for
     // contamination is load well above the core count or a large
     // start→end swing on an otherwise idle box.
-    def loadAvg(): Double =
-      try java.nio.file.Files
-        .readString(java.nio.file.Paths.get("/proc/loadavg"))
-        .split(" ")(0).toDouble
-      catch { case _: Throwable => -1.0 }
     def nProcs(): Int =
       try new java.io.File("/proc").listFiles()
         .count(f => f.getName.forall(_.isDigit))
@@ -456,8 +448,7 @@ object Bench {
         new scala.util.Random(seed.toLong).shuffle(headline)
       case None => headline
     }
-    val benched = order.flatMap(n =>
-      rawBench(n).orElse(qs.get(n)).map(n -> _))
+    val benched = order.flatMap(n => benchPlan(n).map(n -> _))
     val errored = scala.collection.mutable.Set.empty[String]
     val times = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
@@ -495,10 +486,10 @@ object Bench {
     // completed state ("runs" tags how many whole passes it covers).
     def buildAndWrite(passes: Int): String = {
       // results stay in HEADLINE order even when execution was
-      // shuffled — the ordered-array stdout fallback documents itself
-      // as headline-ordered and must remain so
+      // shuffled — the ordered-array stdout line documents itself as
+      // headline-ordered and must remain so
       val results = headline
-        .filter(n => rawBench(n).orElse(qs.get(n)).isDefined)
+        .filter(n => benchPlan(n).isDefined)
         .map { name =>
           val ts = times(name).sorted
           if (ts.isEmpty) name -> (0.0, 0.0)
@@ -523,58 +514,26 @@ object Bench {
       val fullJson =
         f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$passes,$loadJson,"queries":$qJson,"queries_min":$qMinJson,"samples":$qNJson,"errors":$errJson,"sf":"$sfDir"}"""
       try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("/root/repo/BENCH_FULL.json"), fullJson + "\n")
+        java.nio.file.Paths.get("BENCH_FULL.json"), fullJson + "\n")
       catch { case _: Throwable => () } // stdout line still carries medians
 
-      // stdout summary — must fit the 2000-char tail window WITH every
-      // query name recoverable. Query names share heavy family prefixes
-      // (q_/text_/connector_/…), so medians are grouped by the prefix
-      // before the first underscore: queries_ms = {"q":{"topk":210,...},
-      // "text":{...}} reconstructs as "<family>_<key>". Values are
-      // integer milliseconds; if the line still exceeds the window
-      // (future query growth) it degrades to centiseconds ("qunit":"cs")
-      // rather than truncating.
-      def summaryLine(divisor: Double, unit: String): String = {
-        val fams = results.map { case (k, (med, _)) =>
-          val i = k.indexOf('_')
-          (k.substring(0, i), k.substring(i + 1), math.round(med * divisor))
-        }.groupBy(_._1).toSeq.sortBy(_._1)
-          .map { case (fam, es) =>
-            s""""$fam":${es.map(e => s""""${e._2}":${e._3}""")
-              .mkString("{", ",", "}")}"""
-          }.mkString("{", ",", "}")
-        val sfShort = sfDir.split('/').last
-        f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$passes,$loadJson,"qunit":"$unit","queries_$unit":$fams,"errors":$errJson,"sf":"$sfShort"}"""
-      }
-      // Final-fallback stdout line: per-query millisecond integers as an
-      // ORDERED ARRAY (values follow Bench.headline order — the name
-      // list lives in this commit's Bench.scala, and the named map is in
-      // the committed BENCH_FULL.json) plus per-family totals. ~7 chars
-      // per query instead of ~20, so every number still reaches the
-      // driver's 2000-char tail window at any plausible future count.
-      def famTotalsLine: String = {
-        val fams = results
-          .groupBy { case (k, _) => k.substring(0, k.indexOf('_')) }
-          .toSeq.sortBy(_._1)
-          .map { case (fam, es) =>
-            s""""$fam":${math.round(es.map(_._2._1).sum * 1000)}"""
-          }.mkString("{", ",", "}")
-        val ordered = results
-          .map { case (_, (med, _)) => math.round(med * 1000) }
-          .mkString("[", ",", "]")
-        val sfShort = sfDir.split('/').last
-        f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$passes,$loadJson,"qunit":"ms","queries_ms_in_headline_order":$ordered,"families_ms":$fams,"detail":"BENCH_FULL.json","errors":$errJson,"sf":"$sfShort"}"""
-      }
-      // Budget 1900 of the 2000-char tail window: r8's 1900-char ms line
-      // PLUS sbt's ~80-char "[success] Total time" trailer overflowed
-      // the window and the driver parsed nothing. The trailer is now
-      // suppressed (build.sbt showSuccess := false); 100 chars of slack
-      // remain, and the family-totals fallback can never overflow.
-      val ms = summaryLine(1000.0, "ms")
-      lazy val cs = summaryLine(100.0, "cs")
-      if (ms.length <= 1900) ms
-      else if (cs.length <= 1900) cs
-      else famTotalsLine
+      // stdout summary: per-query millisecond integers as an ORDERED
+      // ARRAY (values follow Bench.headline order — the name list lives
+      // in this commit's Bench.scala, and the named map is in the
+      // committed BENCH_FULL.json) plus per-family totals. ~7 chars per
+      // query, so every number fits the last 2000 stdout characters the
+      // bench harness keeps at any plausible future query count.
+      val fams = results
+        .groupBy { case (k, _) => k.substring(0, k.indexOf('_')) }
+        .toSeq.sortBy(_._1)
+        .map { case (fam, es) =>
+          s""""$fam":${math.round(es.map(_._2._1).sum * 1000)}"""
+        }.mkString("{", ",", "}")
+      val ordered = results
+        .map { case (_, (med, _)) => math.round(med * 1000) }
+        .mkString("[", ",", "]")
+      val sfShort = sfDir.split('/').last
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$passes,$loadJson,"qunit":"ms","queries_ms_in_headline_order":$ordered,"families_ms":$fams,"detail":"BENCH_FULL.json","errors":$errJson,"sf":"$sfShort"}"""
     }
 
     // Slow-row deflake top-up (r13 verdict ask #7): the >=3 s rows carry

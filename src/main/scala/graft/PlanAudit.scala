@@ -1,20 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans for the headline queries — the
   * plan-shape audit trail (pushdown, broadcast, partial aggregation,
-  * codegen spans). Run: `sbt "runMain graft.PlanAudit" > PLANS.md`. */
+  * codegen spans) under the shared [[GraftSession]] config; PLANS.md
+  * is audited at 4 cores. Run:
+  * `SPARK_GRAFT_CPUS=4 sbt "runMain graft.PlanAudit" > PLANS.md`. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.cpus)
     // the bench set IS the audit set (single-sourced so a query added to
     // one can't silently miss the other), plus the connector scans whose
     // pushdown evidence only shows through the sharing path

@@ -152,14 +152,15 @@ object PlanContract {
     // injected runtime bloom-filter build over the 10-row query frame
     "sim_filtered_ann" -> ((1, OneRow)),
     "sim_hybrid_rrf" -> ((1, BoundedPool)),
-    // 7 after the r15.2 in-row ADC restructure: the trained-centroid
-    // row, codebook row and per-query probe/LUT row each collapse via a
-    // 1-row collect_list (k ≤ 8 centroids / 8×16 codebook entries / 10
-    // queries — all bounded by construction) then broadcast
-    "sim_ivf_pq" -> ((7, KRowCodebook)),
-    // 3 after the r15.2 in-row ADC restructure (codebook row + query-LUT
-    // row collapses — same bounded frames as sim_ivf_pq's)
-    "sim_pq_adc" -> ((3, KRowCodebook)),
+    // the trained-centroid row, codebook row and per-query probe/LUT
+    // row each collapse via a 1-row collect_list (k ≤ 8 centroids /
+    // 8×16 codebook entries / 10 queries — all bounded by construction)
+    // then broadcast; 6 since the trained codebook is one shared frame
+    // per corpus (its collapse is planned once, inside that frame)
+    "sim_ivf_pq" -> ((6, KRowCodebook)),
+    // codebook row + query-LUT row collapses — same bounded frames as
+    // sim_ivf_pq's; 2 since the codebook is shared per corpus
+    "sim_pq_adc" -> ((2, KRowCodebook)),
     // the k·|queries|-bounded per-query frame collapsing to the 1-row
     // mean-recall pair then broadcast back
     "sim_matryoshka_recall" -> ((1, OneRow)),

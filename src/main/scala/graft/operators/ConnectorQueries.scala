@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.LessThan
 
-import graft.{QueryDef, Tables}
+import graft.QueryDef
 import graft.sharing._
 import graft.sharing.server.LocalSharingServer
 

@@ -818,7 +818,6 @@ object Multimodal {
           |  s.chunk_jaccard, s.caught, c.catch_ok, c.grid_blind_ok
           |FROM scored s, cert c ORDER BY s.media_id""".stripMargin
       }) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       graft.functions.GraftFunctions.register(s)
       val media = graft.CacheRegistry.register(
         Tables.documentsPar(s, d)
@@ -1581,9 +1580,7 @@ object Multimodal {
     scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** Stage frames of the mm_audio_fingerprint pipeline, keyed
-    * docsW/pk/ch/pairs/best/fin/out — the gated query consumes "out";
-    * `graft.tools.AfpProbe` times the stages separately (the
-    * stage-bisect discipline that caught mm_phash's 13 s decode). */
+    * docsW/pk/ch/pairs/best/fin/out — the gated query consumes "out". */
   private[graft] def audioFingerprintFrames(
       s: SparkSession, d: String,
       docsFilter: Column = lit(true)): Map[String, DataFrame] = {

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -43,12 +43,6 @@ object SpatialOps {
     "((c_custkey * (c_custkey + 12345)) % 1600001 * 7919 + 13) % 1600001 - 800000"
   private val lonSql =
     "((c_custkey * (c_custkey + 54321)) % 3600001 * 104729 + 97) % 3600001 - 1800000"
-
-  /** dev-probe access (graft.tools.DbscanProbe) */
-  private[graft] def pointsPublic(s: SparkSession, d: String): DataFrame =
-    points(s, d)
-  private[graft] def cellSqlPublic(lat: String, lon: String,
-      dy: String = "0", dx: String = "0"): String = cellSql(lat, lon, dy, dx)
 
   private def points(s: SparkSession, d: String): DataFrame =
     Tables.customer(s, d).select(

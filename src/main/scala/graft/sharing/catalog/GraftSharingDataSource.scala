@@ -1,7 +1,6 @@
 package graft.sharing.catalog
 
 import java.util
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.connector.catalog.{Table, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform

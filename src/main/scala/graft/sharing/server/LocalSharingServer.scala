@@ -6,8 +6,6 @@ import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
-import graft.sharing.DeltaSchema
-
 /** In-process Delta Sharing server over local parquet files.
   *
   * Serves the full read-only protocol surface the reference client

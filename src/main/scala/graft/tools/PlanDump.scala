@@ -1,11 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for a comma-separated list of gate
   * queries to `<outDir>/<name><suffix>.txt`, one file per query, under
-  * the BENCH session config (local[$SPARK_GRAFT_CPUS], AQE on) so the
-  * committed before/after plan evidence matches what the bench times.
+  * the bench session ([[graft.GraftSession]]) so the committed
+  * before/after plan evidence matches what the bench times.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> <q1,q2,...>
   */
@@ -15,15 +13,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args(2).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.local(graft.GraftSession.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       // "raw:<q>" dumps the bench-timed rawBench variant (file prefix

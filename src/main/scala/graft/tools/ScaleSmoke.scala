@@ -1,10 +1,9 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.{SparkEntry, Tables}
+import graft.{GraftSession, SparkEntry, Tables}
 
 /** Scale smoke harness.
   *
@@ -17,31 +16,19 @@ import graft.{SparkEntry, Tables}
   * sf0.1 corpus ~10× (id-shifted copies — documents/embeddings/orders;
   * events shifted in TIME so event density stays constant and the range
   * join must prune 9/10 of the event span), then runs the heaviest
-  * operators with a per-task listener and asserts NO stage has a task
-  * slower than 10× its median — the skew property that decides whether a
-  * shape survives a 1000-executor cluster. Writes SCALESMOKE.md.
+  * operators under the [[StageTasks]] listener and asserts NO stage
+  * breaks its skew rule (max task <= 10× median) — the property that
+  * decides whether a shape survives a 1000-executor cluster. Writes
+  * SCALESMOKE.md in the working directory.
   */
 object ScaleSmoke {
 
   def main(args: Array[String]): Unit =
     if (args.contains("heavy")) heavy() else smokeAll()
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   private def smokeAll(): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
+    val spark = GraftSession.local(GraftSession.cpus)
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.allDefs.foreach { q =>
       val t0 = System.nanoTime()
@@ -202,19 +189,9 @@ object ScaleSmoke {
     val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE_REPLICAS", "10").toInt
     val baseSf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR",
-      "/root/repo/target/scale-heavy")
-    val spark = session()
-
-    // per-stage task durations, snapshot-and-reset per query
-    val stageTasks = new java.util.concurrent.ConcurrentHashMap[
-      Int, java.util.concurrent.ConcurrentLinkedQueue[Long]]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        stageTasks.computeIfAbsent(t.stageId,
-          _ => new java.util.concurrent.ConcurrentLinkedQueue[Long]())
-          .add(t.taskInfo.duration)
-      }
-    })
+      "target/scale-heavy")
+    val spark = GraftSession.local(GraftSession.cpus)
+    val stageTasks = new StageTasks(spark)
 
     stageScaled(spark, baseSf, outDir, replicas)
 
@@ -229,7 +206,6 @@ object ScaleSmoke {
     report ++= "|---|---|---|---|---|---|\n"
 
     var anyFail = false
-    import scala.jdk.CollectionConverters._
     // optional re-measure filter: `heavy name1,name2` runs a subset
     // (prints rows, skips the SCALESMOKE.md rewrite so a partial run
     // can't masquerade as the full audit)
@@ -243,7 +219,7 @@ object ScaleSmoke {
           "nothing and still print ALL OK")
     }
     heavyQueries.filter(n => only.forall(_.contains(n))).foreach { name =>
-      stageTasks.clear()
+      stageTasks.reset()
       val t0 = System.nanoTime()
       val outcome = try {
         SparkEntry.queries(name)(spark, outDir)
@@ -252,40 +228,23 @@ object ScaleSmoke {
       } catch { case e: Throwable => Some(e) }
       val secs = (System.nanoTime() - t0) / 1e9
       graft.CacheRegistry.releaseAll()
-
-      // listener events arrive on an async bus — the straggler being
-      // gated may not have been delivered yet. Wait until the task count
-      // is stable for 500 ms before snapshotting (no public drain API).
-      var lastCount = -1L
-      var stableSince = System.nanoTime()
-      val waitStart = System.nanoTime()
-      while ((System.nanoTime() - stableSince) < 500L * 1000 * 1000 &&
-          (System.nanoTime() - waitStart) < 30L * 1000 * 1000 * 1000) {
-        val c = stageTasks.values().asScala.map(_.size.toLong).sum
-        if (c != lastCount) { lastCount = c; stableSince = System.nanoTime() }
-        Thread.sleep(50)
-      }
-      val stages = stageTasks.asScala.toSeq
-        .map { case (sid, q) => (sid, q.asScala.toSeq.sorted) }
-      val sized = stages.filter(_._2.length >= 8)
-      val ratios = sized.flatMap { case (_, ds) =>
-        val med = math.max(ds(ds.length / 2), 1L)
-        if (med >= 300) Some(ds.last.toDouble / med) else None
-      }
+      val stages = stageTasks.snapshot()
+      val ratios = stages.flatMap(StageTasks.gatedRatio)
       val worst = if (ratios.isEmpty) 0.0 else ratios.max
-      val skewOk = ratios.forall(_ <= 10.0)
+      val skewOk = !stages.exists(StageTasks.skewed)
       val ok = outcome.isEmpty && skewOk
       if (!ok) anyFail = true
       val status = outcome.map(e => s"FAILED ${e.getClass.getSimpleName}")
         .getOrElse(if (skewOk) "ok" else "SKEWED")
       report ++= f"| $name | $secs%.1f | ${stages.length} | " +
-        f"${stages.map(_._2.length).maxOption.getOrElse(0)} | $worst%.1f | $status |\n"
-      println(f"HEAVY $name%-24s $secs%8.1f s worst-skew $worst%5.1f  $status")
+        f"${stages.map(_.tasks).maxOption.getOrElse(0)} | $worst%.1f | $status |\n"
+      println(f"HEAVY $name%-24s $secs%8.1f s stages ${stages.length}%3d " +
+        f"worst-skew $worst%5.1f  $status")
     }
     report ++= s"\nResult: ${if (anyFail) "FAIL" else "ALL OK"}\n"
     if (only.isEmpty) // a partial re-measure must not pose as the audit
       java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("/root/repo/SCALESMOKE.md"), report.toString)
+        java.nio.file.Paths.get("SCALESMOKE.md"), report.toString)
     println(if (anyFail) "HEAVY FAIL" else "HEAVY ALL OK")
     graft.CacheRegistry.releaseShared()
     graft.operators.ConnectorQueries.stopAll()

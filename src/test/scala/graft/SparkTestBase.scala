@@ -21,15 +21,7 @@ trait SparkTestBase extends AnyFunSuite
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // fixed at 4 (not the host's count) so every spec sees 4 shuffle
+  // partitions on any machine
+  lazy val session: SparkSession = GraftSession.local(4)
 }

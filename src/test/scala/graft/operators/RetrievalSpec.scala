@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.{SparkTestBase, Tables}
 
 /** Cross-checks the hybrid-retrieval operators against independent

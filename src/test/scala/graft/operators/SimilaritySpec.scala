@@ -9,7 +9,6 @@ class SimilaritySpec extends SparkTestBase {
   private lazy val queries = emb.filter(col("vec_id") < 10)
 
   test("brute-force cosine matches an independent driver-side computation") {
-    val spark2 = spark
     val vecs = emb.filter(col("vec_id") < 50)
       .select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap

@@ -694,7 +694,6 @@ class TextMultimodalSpec extends SparkTestBase {
     m.groupBy(_._1).values.foreach { g =>
       assert(math.abs(g.map(_._4).sum - 1.0) < 0.01) }
     // diagonal agrees with the langid query's own predictions
-    import org.apache.spark.sql.functions._
     val preds = graft.SparkEntry.queries("text_langid_quality")(spark, sf0001)
       .join(graft.Tables.documents(spark, sf0001).select("doc_id", "lang"),
         "doc_id")

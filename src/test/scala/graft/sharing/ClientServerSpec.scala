@@ -96,7 +96,6 @@ class ClientServerSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("version honors startingTimestamp (earliest change at/after it)") {
-    import scala.jdk.CollectionConverters._
     val f = java.nio.file.Paths.get("/root/testdata/sf0.001/region.parquet")
     server.addTable("share1", "schema1", server.TableDef(
       "versioned", lineitemSchema, Seq.empty,

@@ -3,7 +3,7 @@ package graft.sharing
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
 import org.apache.spark.sql.functions.{col, count, lit, max, min}
-import org.apache.spark.sql.sources.{EqualTo, LessThan}
+import org.apache.spark.sql.sources.LessThan
 import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkTestBase
