@@ -448,8 +448,10 @@ object ConnectorQueries {
 
     // Partition-value materialization under the gate: the partition
     // column exists ONLY as per-file partitionValues strings on the wire;
-    // grouping on it proves typed reconstitution (§2.1 row 7). Oracle
-    // reads the original unsplit orders.
+    // grouping on it proves typed reconstitution (§2.1 row 7). The
+    // files carry stats, so the grouped COUNT/MIN is answered from the
+    // listing (GraftMetadataAgg) rather than a scan. Oracle reads the
+    // original unsplit orders.
     QueryDef.sql(
       "connector_partition_values",
       """SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,

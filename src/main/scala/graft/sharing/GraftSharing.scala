@@ -2,29 +2,35 @@ package graft.sharing
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.V2Relation
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
 
-import graft.sharing.fs.SignedHttpFileSystem
+import graft.sharing.catalog.GraftTable
 import graft.sharing.streaming.GraftCdfStream
 
 /** Connection-string entry point:
   * `GraftSharing.read(spark, "<profile-path>#<share>.<schema>.<table>")`
   * (reference src/datasource/table.rs:93-103).
   *
-  * Execution model (SURVEY §3.2, Spark-first):
-  *  - driver: REST file listing (with optional predicate/limit hints);
+  * Execution model (SURVEY §3.2, Spark-first). Every read is one DSv2
+  * relation, the one the catalog and the format reader plan:
+  *  - driver: a snapshot read ([[readTable]]) is a [[GraftTable]], whose
+  *    scan builder makes the REST file listing (with predicate/limit
+  *    hints) when a query over the frame is planned — so each query newly
+  *    planned over an unpinned frame sees the table's current version;
   *  - each file becomes a self-contained `graftshare://` path — Spark
   *    plans one or more file partitions per file (NOT the reference's
   *    all-files-in-one-partition scan, src/datasource/scan.rs:77);
   *  - executors: Spark's vectorized parquet reader over HTTP Range
   *    reads; projection/filter pushdown reach the parquet scan natively;
+  *    a client built by `Profile.fromPath` re-lists URLs that expire
+  *    before a task reads them;
   *  - partition values (strings outside the files) ride in each path as
   *    hive-style `k=v` segments (empty string ⇒ NULL,
   *    src/datasource/scan.rs:191-229), so Spark's partition discovery
   *    types them from the table schema and a whole listing is ONE
-  *    parquet scan — the same path encoding as the catalog and the CDF
-  *    stream ([[SignedHttpFileSystem.encodeAll]]).
+  *    parquet scan — the same path encoding as the change feed and the
+  *    CDF stream ([[graft.sharing.fs.SignedHttpFileSystem.encodeAll]]).
   */
 object GraftSharing {
 
@@ -36,61 +42,28 @@ object GraftSharing {
         "connection string must be <profile-path>#<share>.<schema>.<table>")
     }
 
-  def read(spark: SparkSession, connStr: String): DataFrame = {
-    val (profilePath, table) = parseConnection(connStr)
-    readTable(spark, new DeltaSharingClient(Profile.fromPath(profilePath)), table)
-  }
+  def read(spark: SparkSession, connStr: String): DataFrame =
+    spark.read.format("graft-sharing").load(connStr)
 
-  /** Read a shared table; `filters` become best-effort server hints (the
-    * caller must still apply them — Inexact semantics) and `limitHint` is
-    * forwarded but not enforced. `versionAsOf` pins the read to a past
-    * table version (Delta Sharing time travel — the snapshot the server
-    * reconstructs from its change log). */
+  /** Read a shared table as a DSv2 relation over [[GraftTable]]. The
+    * table's metadata is fetched now, for the frame's schema; the file
+    * listing happens when a query over the frame is planned, once per
+    * planned query. `filters` become best-effort server hints and
+    * driver-side stats skipping, merged with whatever filters the query
+    * pushes: they may skip files in which no row matches, but they are no
+    * row filter (Inexact semantics: the caller must still apply them).
+    * `limitHint` is forwarded but not enforced. While
+    * either is given, COUNT/MIN/MAX are never answered from file stats.
+    * `versionAsOf` pins the read to a past table version (Delta Sharing
+    * time travel — the snapshot the server reconstructs from its change
+    * log). */
   def readTable(spark: SparkSession, client: DeltaSharingClient,
       table: TableRef, filters: Seq[Filter] = Seq.empty,
       limitHint: Option[Long] = None,
-      versionAsOf: Option[Long] = None): DataFrame = {
-    val schemaForHints = DeltaSchema.fromSchemaString(
-      client.getTableMetadata(table, versionAsOf)._2.schemaString)
-    val (_, metadata, files) = listFiles(client, table,
-      filters.flatMap(f => PredicateHints.fromFilter(f, schemaForHints)),
-      limitHint, versionAsOf)
-    val schema = DeltaSchema.fromSchemaString(metadata.schemaString)
-    if (files.isEmpty) {
-      import scala.jdk.CollectionConverters._
-      return spark.createDataFrame(
-        Seq.empty[org.apache.spark.sql.Row].asJava, schema)
-    }
-    scan(spark, schema,
-      SignedHttpFileSystem.encodeAll(metadata.partitionColumns,
-        files.map(_ -> Nil)),
-      schema.fieldNames.toSeq)
-  }
-
-  /** The one listing step of every snapshot read: `ops` become both the
-    * wire hint and the driver-side stats skipping (dropping files whose
-    * min/max envelope excludes a pushed filter — purely an optimization,
-    * the residual filter still runs), so the two never drift apart.
-    * Returns the hint sent, the metadata and the kept files. */
-  private[sharing] def listFiles(client: DeltaSharingClient, table: TableRef,
-      ops: Seq[PredicateHints.Op], limitHint: Option[Long],
-      versionAsOf: Option[Long]): (Option[String], Metadata, Seq[FileAction]) = {
-    val hints = PredicateHints.toHintJson(ops)
-    val (_, metadata, files) =
-      client.getTableData(table, hints, limitHint, versionAsOf)
-    (hints, metadata, StatsPruning.prune(files, ops))
-  }
-
-  /** One v1 parquet relation over encoded paths: `readSchema` types the
-    * path segments as partition columns; `columns` fixes the output
-    * order. */
-  private def scan(spark: SparkSession, readSchema: StructType,
-      encoded: (Seq[String], String), columns: Seq[String]): DataFrame = {
-    SignedHttpFileSystem.register(spark.sparkContext.hadoopConfiguration)
-    val (paths, base) = encoded
-    spark.read.schema(readSchema).option("basePath", base)
-      .parquet(paths: _*).select(columns.map(col): _*)
-  }
+      versionAsOf: Option[Long] = None): DataFrame =
+    V2Relation.frame(spark, new GraftTable(client, table,
+      client.getTableMetadata(table, versionAsOf)._2, versionAsOf,
+      filters, limitHint))
 
   /** Read the change data feed between versions as a DataFrame with
     * `_change_type` / `_commit_version` / `_commit_timestamp` metadata
@@ -119,16 +92,16 @@ object GraftSharing {
 
   private def changesFrame(spark: SparkSession, table: TableRef,
       fetched: (Protocol, Metadata, Seq[Actions.ChangeAction]),
-      boundsForError: String): DataFrame = {
+      bounds: String): DataFrame = {
     val (_, metadata, changes) = fetched
     if (changes.isEmpty)
-      throw DeltaSharingException.other(
-        s"no changes for $table in $boundsForError")
-    val schema = DeltaSchema.fromSchemaString(metadata.schemaString)
-    scan(spark, GraftCdfStream.cdfSchema(metadata),
-      GraftCdfStream.encodeChanges(metadata, changes),
-      schema.fieldNames.toSeq ++ Seq(GraftCdfStream.ChangeTypeCol,
-        GraftCdfStream.VersionCol, GraftCdfStream.TimestampCol))
+      throw DeltaSharingException.other(s"no changes for $table in $bounds")
+    val columns = DeltaSchema.fromSchemaString(metadata.schemaString)
+      .fieldNames.toSeq ++ Seq(GraftCdfStream.ChangeTypeCol,
+        GraftCdfStream.VersionCol, GraftCdfStream.TimestampCol)
+    V2Relation.frame(spark, GraftCdfStream.changesTable(spark,
+        s"$table@changes$bounds", metadata, changes))
+      .select(columns.map(col): _*)
   }
 
   /** Tail the change data feed as a STREAM: each micro-batch covers the

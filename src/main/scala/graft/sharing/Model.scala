@@ -87,13 +87,17 @@ final case class OAuthClientCredentials(
   * "oauth_client_credentials", tokenEndpoint, clientId, clientSecret,
   * scope?}`. For v1 an expired token fails fast at authorization time
   * (src/profile.rs:317-323); for v2 token lifecycle lives in the client
-  * (fetch, cache, refresh-on-401). */
+  * (fetch, cache, refresh-on-401). `path` is the file
+  * [[Profile.fromPath]] read it from: a scan over a path profile embeds
+  * it in each file's path, so an executor can re-list an expired signed
+  * URL; an inline-JSON profile has none and its scans cannot refresh. */
 final case class Profile(
     shareCredentialsVersion: Int,
     endpoint: String,
     bearerToken: String,
     expirationTime: Option[java.time.Instant],
-    oauth: Option[OAuthClientCredentials] = None) {
+    oauth: Option[OAuthClientCredentials] = None,
+    private[sharing] val path: Option[String] = None) {
 
   def isExpired: Boolean =
     expirationTime.exists(_.isBefore(java.time.Instant.now()))
@@ -124,7 +128,7 @@ object Profile {
         case e: Exception => throw DeltaSharingException.profile(
           s"Failed to open profile file at $path: ${e.getMessage}")
       }
-    fromJson(content, path)
+    fromJson(content, path).copy(path = Some(path))
   }
 
   def fromJson(content: String, where: String = "<inline>"): Profile = {

@@ -32,7 +32,6 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private var catalogName: String = _
   private var share: String = _
   private var client: DeltaSharingClient = _
-  private var profilePath: Option[String] = None
 
   /** Access-ordered LRU, capped: a long-lived session scanning many
     * version-pinned reads (`@vN` keys are immutable and never evicted by
@@ -70,7 +69,6 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name
     share = Option(options.get("share")).getOrElse(name)
-    profilePath = Option(options.get("profile"))
     val profile =
       if (options.containsKey("profile.json")) Profile.fromJson(options.get("profile.json"))
       else if (options.containsKey("profile")) Profile.fromPath(options.get("profile"))
@@ -148,7 +146,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     try {
       val (_, metadata) = cacheGetOrUpdate(cacheKey,
         client.getTableMetadata(ref, versionAsOf))
-      new GraftTable(client, ref, metadata, profilePath, versionAsOf)
+      new GraftTable(client, ref, metadata, versionAsOf)
     } catch {
       // only a missing table maps to NoSuchTable; other 4xx (e.g. a
       // future VERSION AS OF) must surface their real message

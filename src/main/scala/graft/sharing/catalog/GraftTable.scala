@@ -10,11 +10,11 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownLimit, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScanBuilder, ParquetTable}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
+import org.apache.spark.sql.graftshim.V2Relation
 
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
-
+import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,16 +23,19 @@ import graft.sharing._
 import graft.sharing.fs.SignedHttpFileSystem
 
 /** DSv2 table over a shared Delta table (reference
-  * src/datasource/table.rs:144-218). Read-only batch scans;
-  * `versionAsOf` pins every server query to a past version (SQL
-  * `VERSION AS OF` routes here through GraftCatalog). */
-final class GraftTable(client: DeltaSharingClient, ref: TableRef,
-    metadata: Metadata, profilePath: Option[String] = None,
-    versionAsOf: Option[Long] = None)
+  * src/datasource/table.rs:144-218), the one relation of every snapshot
+  * read: catalog SQL, the format reader and `GraftSharing.readTable`.
+  * Read-only batch scans; `versionAsOf` pins every server query to a
+  * past version (SQL `VERSION AS OF` routes here through GraftCatalog).
+  * `hints` and `limitHint` are `readTable`'s explicit seeds, merged into
+  * each scan's listing (see [[GraftScanBuilder]]). */
+final class GraftTable private[sharing] (client: DeltaSharingClient,
+    ref: TableRef, metadata: Metadata, versionAsOf: Option[Long] = None,
+    hints: Seq[Filter] = Nil, limitHint: Option[Long] = None)
   extends Table with SupportsRead {
 
   private val fullSchema: StructType =
-    DeltaSchema.fromSchemaString(metadata.schemaString)
+    V2Relation.nullable(DeltaSchema.fromSchemaString(metadata.schemaString))
 
   override def name(): String =
     versionAsOf.fold(ref.toString)(v => s"$ref@v$v")
@@ -51,7 +54,7 @@ final class GraftTable(client: DeltaSharingClient, ref: TableRef,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(client, ref, metadata, fullSchema, options,
-      profilePath, versionAsOf)
+      versionAsOf, hints, limitHint)
 }
 
 /** Pushdown negotiation (reference src/datasource/table.rs:174-213):
@@ -62,13 +65,24 @@ final class GraftTable(client: DeltaSharingClient, ref: TableRef,
   *  - columns: delegated (vectorized reader prunes parquet columns);
   *  - limit: forwarded as `limitHint`, reported PARTIAL (`pushLimit`
   *    returns false) so Spark keeps the global limit, mirroring
-  *    table.rs:127-137 + scan.rs:80.
+  *    table.rs:127-137 + scan.rs:80;
+  *  - seeds: `readTable`'s explicit `seedFilters` and `seedLimit` join
+  *    the pushed filters and limit in the same hint and the same stats
+  *    skipping. They are hints only — never replayed into the parquet
+  *    scan, never enforced — and while either is present no aggregate is
+  *    answered from stats, since the listing may omit files.
   *
   * The server `query` POST is deferred to `build()`, AFTER Spark has
   * pushed filters, limit, and columns — so the single request carries
   * BOTH `jsonPredicateHints` and `limitHint` (pushing filters eagerly
   * would fire the POST before `pushLimit` runs, and the limit hint would
-  * never reach the server). The recorded filters are then replayed into
+  * never reach the server). Hints also drive driver-side stats skipping
+  * ([[StatsPruning]]: dropping files whose min/max envelope excludes a
+  * hinted filter — purely an optimization, the residual filter still
+  * runs), so wire hint and skipping never drift apart. When the client's
+  * profile was read from a file, each path carries a refresh spec, so a
+  * URL that expires before its task reads it is re-listed on the
+  * executor. The recorded filters are then replayed into
   * Spark's own ParquetScanBuilder, which still prunes hive-style
   * partition directories locally and pushes data filters into the
   * parquet reader — trustworthy local pruning on top of the hint.
@@ -79,10 +93,10 @@ final class GraftTable(client: DeltaSharingClient, ref: TableRef,
   * one-or-more splits per file — not the reference's single-partition
   * scan (scan.rs:77).
   */
-final class GraftScanBuilder(client: DeltaSharingClient, ref: TableRef,
-    metadata: Metadata, fullSchema: StructType,
-    options: CaseInsensitiveStringMap, profilePath: Option[String] = None,
-    versionAsOf: Option[Long] = None)
+final class GraftScanBuilder private[sharing] (client: DeltaSharingClient,
+    ref: TableRef, metadata: Metadata, fullSchema: StructType,
+    options: CaseInsensitiveStringMap, versionAsOf: Option[Long],
+    seedFilters: Seq[Filter], seedLimit: Option[Long])
   extends ScanBuilder
   with SupportsPushDownCatalystFilters
   with SupportsPushDownRequiredColumns
@@ -95,49 +109,43 @@ final class GraftScanBuilder(client: DeltaSharingClient, ref: TableRef,
   private var limitHint: Option[Long] = None
   private var delegate: Option[ParquetScanBuilder] = None
   /** (encoded path, raw partitionValues) for every planned file, and the
-    * scan options of the current plan — kept so `build()` can hand
+    * synthetic base of the current plan — kept so `build()` can hand
     * GraftScan a rebuild closure for runtime (DPP) file pruning. */
   private var plannedFiles: Seq[(String, Map[String, String])] = Seq.empty
-  private var plannedOpts: Option[CaseInsensitiveStringMap] = None
+  private var plannedBase: String = ""
   private var partCols: Seq[String] = metadata.partitionColumns
-
-  /** The hint JSON most recently sent to the server (for tests/explain). */
-  @volatile var sentPredicateHints: Option[String] = None
 
   /** Delegating parquet builder over the given encoded paths, with the
     * recorded column/filter pushdowns replayed. */
-  private def builderFor(paths: Seq[String],
-      optsWithBase: CaseInsensitiveStringMap): ParquetScanBuilder = {
-    val table = ParquetTable(ref.toString, spark, optsWithBase, paths,
-      Some(fullSchema), classOf[ParquetFileFormat])
-    val b = table.newScanBuilder(optsWithBase).asInstanceOf[ParquetScanBuilder]
+  private def builderFor(paths: Seq[String]): ParquetScanBuilder = {
+    val table = SignedHttpFileSystem.parquetTable(spark, ref.toString,
+      fullSchema, (paths, plannedBase), options)
+    val b = table.newScanBuilder(table.options)
+      .asInstanceOf[ParquetScanBuilder]
     requiredSchema.foreach(b.pruneColumns)
     if (catalystFilters.nonEmpty) b.pushFilters(catalystFilters)
     b
   }
 
-  /** Fire the (single) query POST with all accumulated hints, then build
-    * the delegating parquet scan builder and replay recorded pushdowns. */
+  /** Fire the (single) query POST with the seeds and every pushed hint,
+    * skip files by stats, then build the delegating parquet scan builder
+    * and replay recorded pushdowns. */
   private def freshDelegate(): ParquetScanBuilder = {
-    SignedHttpFileSystem.register(spark.sparkContext.hadoopConfiguration)
-    val (hints, meta, files) = GraftSharing.listFiles(client, ref,
-      catalystFilters.flatMap(PredicateHints.fromCatalyst(_, fullSchema)),
-      limitHint, versionAsOf)
-    sentPredicateHints = hints
+    val ops = (seedFilters.flatMap(PredicateHints.fromFilter(_, fullSchema)) ++
+      catalystFilters.flatMap(PredicateHints.fromCatalyst(_, fullSchema)))
+      .distinct
+    val (_, meta, listed) = client.getTableData(ref,
+      PredicateHints.toHintJson(ops), (seedLimit ++ limitHint).minOption,
+      versionAsOf)
+    val files = StatsPruning.prune(listed, ops)
     partCols = meta.partitionColumns
     val (paths, base) = SignedHttpFileSystem.encodeAll(partCols,
       files.map(_ -> Nil),
-      f => profilePath.map(pp => SignedHttpFileSystem.RefreshSpec(
+      f => client.profile.path.map(pp => SignedHttpFileSystem.RefreshSpec(
         pp, ref.share, ref.schema, ref.name, f.id, versionAsOf)))
     plannedFiles = paths.zip(files.map(_.partitionValues))
-    // common synthetic base so hive-style k=v segments become partitions
-    val optsWithBase = {
-      val m = new java.util.HashMap[String, String](options)
-      m.put("basePath", base)
-      new CaseInsensitiveStringMap(m)
-    }
-    plannedOpts = Some(optsWithBase)
-    val b = builderFor(plannedFiles.map(_._1), optsWithBase)
+    plannedBase = base
+    val b = builderFor(paths)
     delegate = Some(b)
     b
   }
@@ -178,10 +186,12 @@ final class GraftScanBuilder(client: DeltaSharingClient, ref: TableRef,
   // reports Statistics::new_unknown (src/datasource/scan.rs:154-156).
   //
   // Exactness preconditions (any failure ⇒ refuse, normal scan):
-  //  - no residual filters and no limit hint (Spark only offers the
-  //    aggregate when nothing sits between Aggregate and the scan, but
-  //    the guard is kept local so the pushdown can never silently
-  //    ignore a recorded filter);
+  //  - no residual filters, no limit hint and no seeds (Spark only
+  //    offers the aggregate when nothing sits between Aggregate and the
+  //    scan, but the guard is kept local so the pushdown can never
+  //    silently ignore a recorded filter; a seeded scan lists only the
+  //    files its hints keep, so stats of the full listing would answer
+  //    for files it does not read);
   //  - group-by columns are top-level partition columns (their exact
   //    values travel as per-file partitionValues — empty string ⇒ NULL,
   //    the rule the scan path applies through the hive default-partition
@@ -218,7 +228,8 @@ final class GraftScanBuilder(client: DeltaSharingClient, ref: TableRef,
     fullSchema.fields.find(_.name.equalsIgnoreCase(name))
 
   private def planAggregation(agg: Aggregation): Option[GraftLocalScan] = {
-    if (catalystFilters.nonEmpty || limitHint.nonEmpty) return None
+    if (catalystFilters.nonEmpty || limitHint.nonEmpty ||
+        seedFilters.nonEmpty || seedLimit.nonEmpty) return None
     val partLower = metadata.partitionColumns.map(_.toLowerCase).toSet
 
     // group-by: single-part references to partition columns only
@@ -405,7 +416,7 @@ final class GraftScanBuilder(client: DeltaSharingClient, ref: TableRef,
         fullSchema.fields.find(_.name.equalsIgnoreCase(c))
           .map(f => c -> f.dataType))
       new GraftScan(inner, plannedFiles, types,
-        paths => builderFor(paths, plannedOpts.get).build())
+        paths => builderFor(paths).build())
     }
   }
 }

@@ -5,6 +5,11 @@ import java.net.http.{HttpRequest, HttpResponse}
 import org.apache.hadoop.fs._
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.jdk.OptionConverters._
 
 /** Read-only Hadoop FileSystem for Delta Sharing pre-signed URLs, scheme
@@ -195,6 +200,23 @@ object SignedHttpFileSystem {
     (paths, s"graftshare:///t/$uid")
   }
 
+  /** The one parquet table over a listing's encoded paths (the
+    * `(paths, basePath)` of [[encodeAll]]): `schema` types the data
+    * columns and every path segment, `options` are the caller's scan
+    * options, to which the `basePath` is added. Every read plans through
+    * it: the snapshot scan, the change feed and each CDF micro-batch. */
+  def parquetTable(spark: SparkSession, name: String, schema: StructType,
+      encoded: (Seq[String], String),
+      options: java.util.Map[String, String] = java.util.Map.of())
+      : ParquetTable = {
+    register(spark.sparkContext.hadoopConfiguration)
+    val (paths, base) = encoded
+    val opts = new java.util.HashMap[String, String](options)
+    opts.put("basePath", base)
+    ParquetTable(name, spark, new CaseInsensitiveStringMap(opts), paths,
+      Some(schema), classOf[ParquetFileFormat])
+  }
+
   /** Hive path-name escaping: the character set of Spark's
     * `ExternalCatalogUtils.escapePathName` (control characters, DEL and
     * the punctuation below), which partition discovery reverses with
@@ -363,7 +385,7 @@ object SignedHttpInputStream {
 
   /** Number of refresh LISTING round-trips issued by this JVM (tests
     * assert the one-listing-per-expiry-wave property against it). */
-  private[fs] val refreshListings =
+  private[sharing] val refreshListings =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
   private def tableKey(r: SignedHttpFileSystem.RefreshSpec): String =

@@ -4,16 +4,16 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetScanBuilder, ParquetTable}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sharing._
+import graft.sharing.catalog.SharingProvider
 import graft.sharing.fs.SignedHttpFileSystem
 
 /** Structured Streaming source that TAILS a shared table's change data
@@ -44,36 +44,17 @@ import graft.sharing.fs.SignedHttpFileSystem
   * `spark.readStream.format("graft-sharing-cdf").option("path",
   * "<profile>#<share>.<schema>.<table>").option("startingVersion", n)`.
   */
-final class GraftCdfStreamProvider extends TableProvider
-    with org.apache.spark.sql.sources.DataSourceRegister {
+final class GraftCdfStreamProvider extends SharingProvider {
 
   override def shortName(): String = "graft-sharing-cdf"
 
-  // Spark calls inferSchema then getTable on the same provider instance
-  // per load(); resolve (client, metadata) once and reuse — one REST
-  // round-trip per stream start, not one per callback.
-  private val resolved = scala.collection.concurrent.TrieMap
-    .empty[String, (DeltaSharingClient, TableRef, Metadata)]
-
-  private def connect(options: CaseInsensitiveStringMap)
-      : (DeltaSharingClient, TableRef, Metadata) = {
-    val path = Option(options.get("path")).getOrElse(
-      throw DeltaSharingException.parseSecurable(
-        "graft-sharing-cdf needs a path of the form <profile>#<share>.<schema>.<table>"))
-    resolved.getOrElseUpdate(path, {
-      val (profilePath, ref) = GraftSharing.parseConnection(path)
-      val client = new DeltaSharingClient(Profile.fromPath(profilePath))
-      (client, ref, client.getTableMetadata(ref)._2)
-    })
-  }
-
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GraftCdfStream.cdfSchema(connect(options)._3)
+    GraftCdfStream.cdfSchema(connect(options, None)._3)
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
     val options = new CaseInsensitiveStringMap(properties)
-    val (client, ref, metadata) = connect(options)
+    val (client, ref, metadata) = connect(options, None, consume = true)
     // start bound: a version, or an ISO-8601 timestamp the server
     // resolves to the earliest version committed at/after it (one
     // metadata probe at stream start; the checkpointed cursor then owns
@@ -91,8 +72,6 @@ final class GraftCdfStreamProvider extends TableProvider
     }
     new GraftCdfStreamTable(client, ref, metadata, startingVersion)
   }
-
-  override def supportsExternalMetadata(): Boolean = false
 }
 
 object GraftCdfStream {
@@ -115,15 +94,17 @@ object GraftCdfStream {
       StructField(TimestampCol, LongType, nullable = true)))
   }
 
-  /** Change files → encoded paths and their `basePath`: the CDF columns
-    * ride as path segments after the table's partition values, in
-    * [[cdfSchema]] order (a missing timestamp ⇒ NULL). */
-  def encodeChanges(metadata: Metadata, changes: Seq[Actions.ChangeAction])
-      : (Seq[String], String) =
-    SignedHttpFileSystem.encodeAll(metadata.partitionColumns,
-      changes.map(c => c.file -> Seq(ChangeTypeCol -> c.changeType,
-        VersionCol -> c.version.toString,
-        TimestampCol -> c.timestamp.fold("")(_.toString))))
+  /** The parquet table over a set of change files, typed by
+    * [[cdfSchema]]: the CDF columns ride as path segments after the
+    * table's partition values (a missing timestamp ⇒ NULL). The batch
+    * change feed and every micro-batch plan through it. */
+  def changesTable(spark: SparkSession, name: String, metadata: Metadata,
+      changes: Seq[Actions.ChangeAction]): ParquetTable =
+    SignedHttpFileSystem.parquetTable(spark, name, cdfSchema(metadata),
+      SignedHttpFileSystem.encodeAll(metadata.partitionColumns,
+        changes.map(c => c.file -> Seq(ChangeTypeCol -> c.changeType,
+          VersionCol -> c.version.toString,
+          TimestampCol -> c.timestamp.fold("")(_.toString)))))
 }
 
 final class GraftCdfStreamTable(client: DeltaSharingClient, ref: TableRef,
@@ -141,8 +122,7 @@ final class GraftCdfStreamTable(client: DeltaSharingClient, ref: TableRef,
       override def readSchema(): StructType = schema0
       override def description(): String = s"GraftCdfScan $ref"
       override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-        new GraftCdfMicroBatchStream(client, ref, metadata, schema0,
-          startingVersion)
+        new GraftCdfMicroBatchStream(client, ref, metadata, startingVersion)
     }
 }
 
@@ -153,8 +133,7 @@ final case class VersionOffset(version: Long) extends Offset {
 }
 
 final class GraftCdfMicroBatchStream(client: DeltaSharingClient,
-    ref: TableRef, metadata: Metadata, cdfSchema: StructType,
-    startingVersion: Long)
+    ref: TableRef, metadata: Metadata, startingVersion: Long)
   extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   private val spark = SparkSession.active
@@ -231,15 +210,9 @@ final class GraftCdfMicroBatchStream(client: DeltaSharingClient,
           "the new schema; the checkpoint cursor is preserved.")
     if (changes.isEmpty) { plannedFactory = Some(EmptyBatchFactory); return Array.empty }
 
-    SignedHttpFileSystem.register(spark.sparkContext.hadoopConfiguration)
-    val (paths, base) = GraftCdfStream.encodeChanges(meta, changes)
-    val opts = new java.util.HashMap[String, String]()
-    opts.put("basePath", base)
-    val csMap = new CaseInsensitiveStringMap(opts)
-    val table = ParquetTable(s"$ref@changes[$from,$to]", spark, csMap, paths,
-      Some(cdfSchema), classOf[ParquetFileFormat])
-    val builder = table.newScanBuilder(csMap).asInstanceOf[ParquetScanBuilder]
-    val batch = builder.build().toBatch
+    val table = GraftCdfStream.changesTable(spark, s"$ref@changes[$from,$to]",
+      metadata, changes)
+    val batch = table.newScanBuilder(table.options).build().toBatch
     plannedFactory = Some(batch.createReaderFactory())
     batch.planInputPartitions()
   }

@@ -138,4 +138,45 @@ class ContractSpec extends AnyFunSuite {
       s"gated queries with neither a bench row nor a named exemption: " +
         s"${unbenched.toSeq.sorted.mkString(", ")}")
   }
+
+  /** DataFrameReader relations in Scala source, comments stripped: a
+    * `.read` chain ending in `.parquet(`, `.format("parquet")`, or a
+    * `.load(` with no format (the session default is parquet). */
+  private def v1ParquetReads(src: String): Seq[String] = {
+    val code = src.replaceAll("(?s)/\\*.*?\\*/", "")
+      .replaceAll("//[^\n]*", "")
+    val chain =
+      """\.read\b(?:\s*\.\s*\w+\s*(?:\((?:[^()]|\([^()]*\))*\))?)+""".r
+    chain.findAllIn(code).filter { c =>
+      c.matches("""(?s).*\.\s*parquet\s*\(.*""") ||
+        c.matches("""(?s).*\.\s*format\s*\(\s*"parquet".*""") ||
+        (c.matches("""(?s).*\.\s*load\s*\(.*""") &&
+          !c.matches("""(?s).*\.\s*format\s*\(.*"""))
+    }.toSeq
+  }
+
+  test("connector main code builds no v1 parquet relation") {
+    // every read in graft/sharing plans through one DSv2 scan: GraftTable
+    // for snapshots, SignedHttpFileSystem.parquetTable for change files.
+    // A DataFrameReader parquet relation forks a second path with no URL
+    // refresh, runtime filtering or stats answers.
+    assert(v1ParquetReads("""spark.read.schema(s).option("basePath", base)
+      .parquet(paths: _*).select(cols: _*)""").size == 1)
+    assert(v1ParquetReads("""spark.read.format("parquet").load(p)""").size == 1)
+    assert(v1ParquetReads("""spark.read.schema(s).load(p)""").size == 1)
+    assert(v1ParquetReads("""/** `spark.read.format("graft-sharing").load(p)`
+      * and spark.read.parquet(p) in prose */
+      spark.read.format("graft-sharing").load(p) // spark.read.parquet(p)
+      ch.read(buf, at); spark.readStream.format("x").load()""").isEmpty)
+    val root = java.nio.file.Paths.get("src/main/scala/graft/sharing")
+    val walk = java.nio.file.Files.walk(root)
+    val hits =
+      try walk.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".scala")).toSeq
+        .flatMap(f => v1ParquetReads(java.nio.file.Files.readString(f))
+          .map(c => s"$f: $c"))
+      finally walk.close()
+    assert(hits.isEmpty, s"v1 parquet relations in connector code:\n" +
+      hits.mkString("\n"))
+  }
 }

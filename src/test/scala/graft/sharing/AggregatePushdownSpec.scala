@@ -1,6 +1,7 @@
 package graft.sharing
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
@@ -75,18 +76,29 @@ class AggregatePushdownSpec extends SparkTestBase with BeforeAndAfterAll {
     assert(p.contains("LocalTableScan"), s"expected LocalTableScan:\n$p")
     assert(!p.contains("BatchScan") && !p.toLowerCase.contains("parquet"),
       s"expected no parquet scan:\n$p")
+    val scans = df.queryExecution.optimizedPlan.collect {
+      case r: DataSourceV2ScanRelation => r.scan.description() }
+    assert(scans.nonEmpty && scans.forall(_.startsWith("GraftMetadataAgg")),
+      s"expected GraftMetadataAgg scans, got $scans")
   }
+
+  private def client = new DeltaSharingClient(Profile.fromPath(profilePath))
+  private val custAgg = TableRef("sh", "sc", "cust_agg")
   private def assertRealScan(df: DataFrame): Unit =
     assert(planOf(df).contains("BatchScan"),
       s"expected fallback BatchScan:\n${planOf(df)}")
 
   test("global COUNT(*) is metadata-only and exact") {
-    val df = direct.agg(count(lit(1)).as("n"))
-    assertMetaOnly(df)
     val expected = spark.read.format("graft-sharing")
       .load(s"$profilePath#sh.sc.cust_agg")
       .select("c_custkey").rdd.count() // forced real scan as truth
-    assert(df.collect()(0).getLong(0) == expected)
+    Seq(direct, GraftSharing.readTable(spark, client, custAgg)).foreach { t =>
+      val df = t.agg(count(lit(1)).as("n"))
+      assertMetaOnly(df)
+      val gets = server.dataRequests
+      assert(df.collect()(0).getLong(0) == expected)
+      assert(server.dataRequests == gets, "a stats answer read data files")
+    }
   }
 
   test("grouped COUNT(*) + COUNT(data col) + COUNT(partition col) push; NULL partition groups correctly") {
@@ -135,6 +147,14 @@ class AggregatePushdownSpec extends SparkTestBase with BeforeAndAfterAll {
     val nostats = spark.read.format("graft-sharing")
       .load(s"$profilePath#sh.sc.cust_nostats").agg(count(lit(1)).as("n"))
     assertRealScan(nostats)
+    // readTable seeds: a hinted frame lists only the files its hints
+    // keep, so it is never answered from the stats of the full listing
+    assertRealScan(GraftSharing.readTable(spark, client, custAgg,
+        filters = Seq(org.apache.spark.sql.sources.GreaterThan(
+          "c_custkey", java.lang.Long.valueOf(10L))))
+      .agg(count(lit(1)).as("n")))
+    assertRealScan(GraftSharing.readTable(spark, client, custAgg,
+      limitHint = Some(5L)).agg(count(lit(1)).as("n")))
     // fallbacks stay CORRECT, not just non-local
     assert(filtered.collect()(0).getLong(0) ==
       direct.collect().count(r =>

@@ -77,10 +77,20 @@ class RuntimeFilterSpec extends SparkTestBase with BeforeAndAfterAll {
     }
   }
 
+  /** The same fact table through catalog SQL and through `readTable`:
+    * both plan the one GraftScan, so both prune at runtime. */
   private def runPruneCase(dimDir: String): Unit = {
+    val client = new DeltaSharingClient(Profile.fromJson(server.profileJson))
+    runPruneCase(dimDir, spark.table("dpp.main.orders_part"))
+    runPruneCase(dimDir, GraftSharing.readTable(spark, client,
+      TableRef("dpp", "main", "orders_part")))
+  }
+
+  private def runPruneCase(dimDir: String,
+      fact: org.apache.spark.sql.DataFrame): Unit = {
     val dim = spark.read.parquet(dimDir)
       .filter(col("dim_id") === 5).select("prio")
-    val joined = spark.table("dpp.main.orders_part")
+    val joined = fact
       .join(broadcast(dim), col("o_orderpriority") === col("prio"))
     val planned = joined.queryExecution.executedPlan.toString
     // the v2 scan must carry a dynamic-pruning runtime filter on the

@@ -1,12 +1,15 @@
 package graft.sharing
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+import org.apache.spark.sql.execution.UnionExec
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions.{col, count, lit, max, min}
 import org.apache.spark.sql.sources.LessThan
 import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkTestBase
+import graft.sharing.fs.SignedHttpInputStream
 import graft.sharing.server.LocalSharingServer
 
 /** Full-path test: local sharing server → REST client → signed URLs →
@@ -28,6 +31,16 @@ class SharingEndToEndSpec extends SparkTestBase with BeforeAndAfterAll {
   override def afterAll(): Unit = { server.stop(); super.afterAll() }
 
   private def table = TableRef("share1", "schema1", "lineitem")
+
+  /** Distinct files the planned DSv2 scans of `df` read. A connector
+    * frame reports no `inputFiles` (it is not a v1 file relation), so
+    * count the files of the scan's planned input partitions. */
+  private def scannedFiles(df: DataFrame): Int =
+    df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b }
+      .flatMap(_.inputPartitions).flatMap {
+        case fp: FilePartition => fp.files.map(_.filePath)
+        case other => fail(s"not a file partition: $other")
+      }.distinct.size
 
   test("connector scan equals direct parquet read") {
     val viaSharing = GraftSharing.readTable(spark, client, table)
@@ -59,7 +72,9 @@ class SharingEndToEndSpec extends SparkTestBase with BeforeAndAfterAll {
     val df = GraftSharing.readTable(spark, client, table,
       filters = Seq(LessThan("l_quantity", java.lang.Double.valueOf(10.0))),
       limitHint = Some(25))
-    // server saw the hint
+    // the listing happens when the frame is planned; the server saw the
+    // hint
+    df.queryExecution.executedPlan
     assert(server.lastPredicateHints.exists(_.contains("\"op\":\"lessThan\"")))
     assert(server.lastLimitHint.contains("25"))
     // hints are best-effort: engine-side filter still applied by caller
@@ -174,7 +189,7 @@ class SharingEndToEndSpec extends SparkTestBase with BeforeAndAfterAll {
       val ref = TableRef("width", "sc", "t")
       def assertOneScan(df: DataFrame): Unit = {
         val p = df.queryExecution.sparkPlan
-        val scans = p.collect { case s: FileSourceScanExec => s }
+        val scans = p.collect { case s: BatchScanExec => s }
         assert(scans.size == 1, s"expected one parquet scan:\n$p")
         assert(p.collect { case u: UnionExec => u }.isEmpty, s"Union in plan:\n$p")
       }
@@ -243,13 +258,13 @@ class SharingEndToEndSpec extends SparkTestBase with BeforeAndAfterAll {
       val c = new DeltaSharingClient(Profile.fromJson(statsServer.profileJson))
       val ref = TableRef("sh", "sc", "orders_stats")
       // no filter: both files planned
-      assert(GraftSharing.readTable(spark, c, ref).inputFiles.length == 2)
+      assert(scannedFiles(GraftSharing.readTable(spark, c, ref)) == 2)
       // filter under mid: only the lo file survives pruning, and the
       // result still row-matches the plain filtered read
       val filtered = GraftSharing.readTable(spark, c, ref,
         filters = Seq(org.apache.spark.sql.sources.LessThan(
           "o_orderkey", java.lang.Long.valueOf(mid))))
-      assert(filtered.inputFiles.length == 1)
+      assert(scannedFiles(filtered) == 1)
       assert(filtered.filter(col("o_orderkey") < mid).count() ==
         src.filter(col("o_orderkey") < mid).count())
     } finally statsServer.stop()
@@ -259,11 +274,12 @@ class SharingEndToEndSpec extends SparkTestBase with BeforeAndAfterAll {
     // connector_stats_skipping pushes o_orderkey < 300 against the
     // 4-slice range layout — exactly one file may survive pruning
     val df = graft.SparkEntry.queries("connector_stats_skipping")(spark, sf0001)
-    assert(df.inputFiles.length == 1,
-      s"expected 1 pruned input file, got ${df.inputFiles.length}")
+    assert(scannedFiles(df) == 1,
+      s"expected 1 pruned input file, got ${scannedFiles(df)}")
   }
 
-  test("expired signed URL fails with a clear error") {
+  test("expired URL fails with a 403 when the profile has no path") {
+    // an inline-JSON profile gives the scan nothing to re-list from
     val shortServer = new LocalSharingServer(
       urlTtl = java.time.Duration.ofMillis(1))
     val schema = spark.read.parquet(s"$sf0001/region.parquet").schema
@@ -277,6 +293,26 @@ class SharingEndToEndSpec extends SparkTestBase with BeforeAndAfterAll {
       val e = intercept[org.apache.spark.SparkException](df.count())
       assert(e.getMessage.contains("403") ||
         Option(e.getCause).exists(_.getMessage.contains("403")))
+    } finally shortServer.stop()
+  }
+
+  test("a readTable frame from a path profile re-lists URLs that expire after planning") {
+    val shortServer = new LocalSharingServer(
+      urlTtl = java.time.Duration.ofMillis(300))
+    val direct = spark.read.parquet(s"$sf0001/lineitem.parquet")
+    shortServer.addParquetTable("sh", "sc", "lineitem",
+      s"$sf0001/lineitem.parquet", DeltaSchema.toSchemaString(direct.schema))
+    shortServer.start()
+    try {
+      val c = new DeltaSharingClient(Profile.fromPath(shortServer.writeProfile()))
+      val df = GraftSharing.readTable(spark, c, TableRef("sh", "sc", "lineitem"))
+      df.queryExecution.executedPlan // lists: the URLs expire 300 ms later
+      Thread.sleep(600)
+      val before = SignedHttpInputStream.refreshListings.get()
+      val got = df.collect()
+      assert(SignedHttpInputStream.refreshListings.get() == before + 1)
+      assert(got.map(_.toString).sorted.toSeq ==
+        direct.collect().map(_.toString).sorted.toSeq)
     } finally shortServer.stop()
   }
 }

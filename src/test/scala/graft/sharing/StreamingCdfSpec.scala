@@ -308,9 +308,7 @@ class StreamingCdfSpec extends SparkTestBase with BeforeAndAfterAll {
 
   test("offset serde roundtrips and rejects malformed json") {
     val stream = new GraftCdfMicroBatchStream(client, table,
-      client.getTableMetadata(table)._2,
-      graft.sharing.streaming.GraftCdfStream.cdfSchema(
-        client.getTableMetadata(table)._2), 1L)
+      client.getTableMetadata(table)._2, 1L)
     assert(stream.deserializeOffset(VersionOffset(7L).json) == VersionOffset(7L))
     assert(stream.deserializeOffset("""{ "version" : -1 }""") == VersionOffset(-1L))
     intercept[DeltaSharingException](stream.deserializeOffset("""{"ver":1}"""))
