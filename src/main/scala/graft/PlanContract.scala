@@ -184,11 +184,11 @@ object PlanContract {
     "text_pmi_bigrams" -> ((2, OneRow)),
     "text_unigram_logprob" -> ((1, OneRow)))
 
-  /** The audit set: the bench set plus the two connector pushdown
-    * plans (single-sourced with PlanAudit). */
+  /** The audit set: the bench set (which already holds
+    * connector_filter_pushdown) plus three connector pushdown plans
+    * (single-sourced with PlanAudit). */
   def auditSet: Seq[String] =
-    Bench.headline ++ Seq("connector_filter_pushdown",
-      "connector_partition_values",
+    Bench.headline ++ Seq("connector_partition_values",
       // the metadata-only COUNT: its audited evidence is the ABSENCE of
       // any scan exchange (LocalTableScan over pre-computed agg rows)
       "connector_count_pushdown", "connector_minmax_pushdown")

@@ -1,163 +1,59 @@
 package graft.sharing.catalog
 
-import java.util.OptionalLong
-
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, V2ExpressionUtils}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, Literal => V2Literal}
 import org.apache.spark.sql.connector.read.{Batch, Scan, Statistics, SupportsReportStatistics, SupportsRuntimeV2Filtering}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
+import org.apache.spark.sql.internal.connector.SupportsMetadata
+import org.apache.spark.sql.types.StructType
 
-/** Runtime-filterable wrapper over the delegated parquet scan.
+/** The scan of every snapshot read: Spark's `ParquetScan` over the
+  * shared files, made runtime-filterable.
   *
-  * Spark's v2 `FileScan` does NOT implement runtime filtering, so a bare
-  * delegate would never benefit from dynamic partition pruning — the
-  * optimizer's `PartitionPruning` rule only plants a DPP subquery when
-  * the scan is `SupportsRuntimeV2Filtering`. This wrapper advertises the
-  * shared table's partition columns as filterable; when the join's build
-  * side materializes, Spark hands the runtime predicates here and the
-  * scan REBUILDS over only the matching shared files — at 100 TB the
-  * difference between transferring one partition and the whole table
-  * when the pruning key is only known mid-query (fact ⋈ filtered dim).
-  *
-  * Pruning is conservative: a file is dropped only when EVERY predicate
-  * is fully understood (IN / = / IS_NOT_NULL over one partition column
-  * whose type has an unambiguous string form) and positively excludes
-  * the file's partition value. Anything else keeps the file — runtime
-  * filters are an optimization; the join still filters rows, so keeping
-  * too much is always correct while dropping too much never is.
+  * Spark's v2 `FileScan` does not implement `SupportsRuntimeV2Filtering`,
+  * so the optimizer's `PartitionPruning` rule would never plant a dynamic
+  * pruning (DPP) filter on a bare one. This wrapper forwards everything
+  * else (schema, batch, statistics and the formatted-plan metadata) and
+  * advertises the partition columns the scan reads as filterable. When
+  * the join's build side materializes, each runtime predicate is turned
+  * into a Catalyst partition filter and added to the delegate's
+  * `partitionFilters`, so `FileScan.partitions` prunes through
+  * `fileIndex.listFiles`: the index that turns the `k=v` path segments
+  * into the rows the scan returns also decides which files a runtime
+  * filter keeps, with Spark's semantics for every partition type (a
+  * NULL partition never satisfies an `IN`). A predicate that does not
+  * convert, or names no partition column, is skipped, which keeps files:
+  * the join still filters rows, so keeping too much is always correct.
   */
-final class GraftScan(
-    initial: Scan,
-    files: Seq[(String, Map[String, String])],
-    partitionTypes: Seq[(String, DataType)],
-    rebuild: Seq[String] => Scan)
-  extends Scan with SupportsRuntimeV2Filtering with SupportsReportStatistics {
+final class GraftScan(initial: ParquetScan) extends Scan
+  with SupportsRuntimeV2Filtering with SupportsReportStatistics
+  with SupportsMetadata {
 
-  @volatile private var current: Scan = initial
+  @volatile private var current: ParquetScan = initial
 
   override def readSchema(): StructType = current.readSchema()
   override def description(): String = current.description()
   override def toBatch: Batch = current.toBatch
-  override def estimateStatistics(): Statistics = current match {
-    case s: SupportsReportStatistics => s.estimateStatistics()
-    case _ => new Statistics {
-      override def sizeInBytes(): OptionalLong = OptionalLong.empty()
-      override def numRows(): OptionalLong = OptionalLong.empty()
-    }
-  }
+  override def estimateStatistics(): Statistics = current.estimateStatistics()
+  override def getMetaData(): Map[String, String] = current.getMetaData()
 
+  /** Only the partition columns the scan reads: `PartitionPruning`
+    * resolves these against the scan's output, so an unread one would
+    * fail the query. */
   override def filterAttributes(): Array[NamedReference] =
-    partitionTypes.map { case (c, _) => Expressions.column(c) }.toArray
+    initial.readPartitionSchema.fieldNames.map(Expressions.column)
 
   override def filter(predicates: Array[Predicate]): Unit = {
-    val kept = files.filter { case (_, pv) =>
-      predicates.forall(p => matches(pv, p))
-    }
-    GraftScan.lastRuntimeKeptFiles = Some(kept.size)
-    if (kept.size < files.size) current = rebuild(kept.map(_._1))
+    val partitionSchema = initial.fileIndex.partitionSchema
+    val converted = predicates.toSeq.flatMap(V2ExpressionUtils.toCatalyst)
+      .map(_.transform {
+        case a: UnresolvedAttribute if a.nameParts.length == 1 =>
+          partitionSchema.find(_.name.equalsIgnoreCase(a.name))
+            .fold[Expression](a)(f => AttributeReference(f.name, f.dataType)())
+      })
+      .filter(_.resolved)
+    current = current.copy(partitionFilters = current.partitionFilters ++ converted)
   }
-
-  // ---- predicate evaluation over raw partition-value strings -----------
-
-  /** Partition-column name + type for a single-field reference, if it IS
-    * a partition column of a string-unambiguous type. */
-  private def partCol(e: V2Expression): Option[(String, DataType)] = e match {
-    case r: NamedReference if r.fieldNames().length == 1 =>
-      partitionTypes.find(_._1.equalsIgnoreCase(r.fieldNames()(0)))
-    case _ => None
-  }
-
-  /** Canonical string for a literal of type `dt`; None ⇒ type not safe
-    * to compare textually (dates/timestamps/decimals: keep the file). */
-  private def litForm(e: V2Expression, dt: DataType): Option[String] =
-    e match {
-      case l: V2Literal[_] => Option(l.value()).flatMap(v => canon(v.toString, dt))
-      case _ => None
-    }
-
-  /** Canonical string for a raw partition value of type `dt`. Delta
-    * partitionValues use "" for NULL — surfaced as None by the caller. */
-  private def canon(raw: String, dt: DataType): Option[String] = dt match {
-    case StringType => Some(raw)
-    case ByteType | ShortType | IntegerType | LongType =>
-      raw.trim.toLongOption.map(_.toString)
-    case BooleanType => Some(raw.trim.toLowerCase)
-    case _ => None
-  }
-
-  /** Partition value of column `c` for pruning decisions:
-    *  - `Left(())`        — cannot judge (column absent from the file's
-    *    partitionValues, or the raw string failed canonicalization):
-    *    the caller must KEEP the file — an unparseable value is not a
-    *    NULL, and dropping on it would violate the conservative
-    *    contract;
-    *  - `Right(None)`     — genuine Delta NULL (empty string, for types
-    *    where "" cannot be a real value);
-    *  - `Right(Some(v))`  — canonicalized value.
-    *
-    * For STRING partition columns an empty string is AMBIGUOUS: the
-    * protocol distinguishes JSON null from "" in partitionValues, but
-    * this client's map representation (like the hive-path encoding)
-    * collapses both to "". Pruning must not positively drop a file whose
-    * value might be a genuine empty string, so StringType "" maps to
-    * Left (keep) rather than NULL. */
-  private def value(pv: Map[String, String], c: String, dt: DataType)
-      : Either[Unit, Option[String]] =
-    pv.collectFirst { case (k, v) if k.equalsIgnoreCase(c) => v } match {
-      case None => Left(())
-      case Some("") if dt == StringType => Left(())
-      case Some("") => Right(None)
-      case Some(raw) => canon(raw, dt) match {
-        case None => Left(())
-        case some => Right(some)
-      }
-    }
-
-  /** True unless the predicate POSITIVELY excludes this file. */
-  private def matches(pv: Map[String, String], p: Predicate): Boolean = {
-    val ch = p.children()
-    p.name() match {
-      case "IN" if ch.length >= 2 =>
-        partCol(ch.head) match {
-          case Some((c, dt)) =>
-            val lits = ch.tail.toSeq.map(litForm(_, dt))
-            if (lits.forall(_.isDefined)) value(pv, c, dt) match {
-              case Left(()) => true // not understood — keep
-              case Right(None) => false // NULL: IN never holds — prune
-              case Right(Some(v)) => lits.flatten.contains(v)
-            } else true
-          case None => true
-        }
-      case "=" if ch.length == 2 =>
-        val sides = Seq((ch(0), ch(1)), (ch(1), ch(0)))
-        sides.collectFirst {
-          case (r, l) if partCol(r).isDefined => (partCol(r).get, l)
-        } match {
-          case Some(((c, dt), l)) => litForm(l, dt) match {
-            case Some(lit) => value(pv, c, dt) match {
-              case Left(()) => true
-              case Right(None) => false // NULL = x never holds
-              case Right(Some(v)) => v == lit
-            }
-            case None => true
-          }
-          case None => true
-        }
-      case "IS_NOT_NULL" if ch.length == 1 =>
-        partCol(ch.head) match {
-          // only a GENUINE Delta NULL ("") prunes; an absent or
-          // unparseable value keeps the file
-          case Some((c, dt)) => value(pv, c, dt) != Right(None)
-          case None => true
-        }
-      case _ => true
-    }
-  }
-}
-
-object GraftScan {
-  /** Driver-side observability for specs: how many files survived the
-    * most recent runtime filter() call. */
-  @volatile var lastRuntimeKeptFiles: Option[Int] = None
 }

@@ -91,7 +91,9 @@ final class GraftTable private[sharing] (client: DeltaSharingClient,
   * embed the signed URLs (+ hive-style partition-value segments), so
   * execution gets whole-stage codegen, vectorized decode, and
   * one-or-more splits per file — not the reference's single-partition
-  * scan (scan.rs:77).
+  * scan (scan.rs:77). `build()` wraps it in a [[GraftScan]] for every
+  * snapshot read, partitioned or not, so a runtime (DPP) filter prunes
+  * through Spark's own file index, with Spark's semantics.
   */
 final class GraftScanBuilder private[sharing] (client: DeltaSharingClient,
     ref: TableRef, metadata: Metadata, fullSchema: StructType,
@@ -108,28 +110,10 @@ final class GraftScanBuilder private[sharing] (client: DeltaSharingClient,
   private var catalystFilters: Seq[Expression] = Seq.empty
   private var limitHint: Option[Long] = None
   private var delegate: Option[ParquetScanBuilder] = None
-  /** (encoded path, raw partitionValues) for every planned file, and the
-    * synthetic base of the current plan — kept so `build()` can hand
-    * GraftScan a rebuild closure for runtime (DPP) file pruning. */
-  private var plannedFiles: Seq[(String, Map[String, String])] = Seq.empty
-  private var plannedBase: String = ""
-  private var partCols: Seq[String] = metadata.partitionColumns
-
-  /** Delegating parquet builder over the given encoded paths, with the
-    * recorded column/filter pushdowns replayed. */
-  private def builderFor(paths: Seq[String]): ParquetScanBuilder = {
-    val table = SignedHttpFileSystem.parquetTable(spark, ref.toString,
-      fullSchema, (paths, plannedBase), options)
-    val b = table.newScanBuilder(table.options)
-      .asInstanceOf[ParquetScanBuilder]
-    requiredSchema.foreach(b.pruneColumns)
-    if (catalystFilters.nonEmpty) b.pushFilters(catalystFilters)
-    b
-  }
 
   /** Fire the (single) query POST with the seeds and every pushed hint,
     * skip files by stats, then build the delegating parquet scan builder
-    * and replay recorded pushdowns. */
+    * over the encoded paths and replay recorded pushdowns. */
   private def freshDelegate(): ParquetScanBuilder = {
     val ops = (seedFilters.flatMap(PredicateHints.fromFilter(_, fullSchema)) ++
       catalystFilters.flatMap(PredicateHints.fromCatalyst(_, fullSchema)))
@@ -138,14 +122,15 @@ final class GraftScanBuilder private[sharing] (client: DeltaSharingClient,
       PredicateHints.toHintJson(ops), (seedLimit ++ limitHint).minOption,
       versionAsOf)
     val files = StatsPruning.prune(listed, ops)
-    partCols = meta.partitionColumns
-    val (paths, base) = SignedHttpFileSystem.encodeAll(partCols,
-      files.map(_ -> Nil),
-      f => client.profile.path.map(pp => SignedHttpFileSystem.RefreshSpec(
-        pp, ref.share, ref.schema, ref.name, f.id, versionAsOf)))
-    plannedFiles = paths.zip(files.map(_.partitionValues))
-    plannedBase = base
-    val b = builderFor(paths)
+    val table = SignedHttpFileSystem.parquetTable(spark, ref.toString,
+      fullSchema, SignedHttpFileSystem.encodeAll(meta.partitionColumns,
+        files.map(_ -> Nil),
+        f => client.profile.path.map(pp => SignedHttpFileSystem.RefreshSpec(
+          pp, ref.share, ref.schema, ref.name, f.id, versionAsOf))), options)
+    val b = table.newScanBuilder(table.options)
+      .asInstanceOf[ParquetScanBuilder]
+    requiredSchema.foreach(b.pruneColumns)
+    if (catalystFilters.nonEmpty) b.pushFilters(catalystFilters)
     delegate = Some(b)
     b
   }
@@ -404,21 +389,11 @@ final class GraftScanBuilder private[sharing] (client: DeltaSharingClient,
     } catch { case _: Exception => None } // refusal is always safe
   }
 
-  /** Build the delegate scan, wrapped for runtime (DPP) file pruning
-    * when the table is partitioned — see [[GraftScan]]. */
-  override def build(): Scan = {
-    pushedAggScan.foreach(s => return s) // metadata-only count
-    val b = delegate.getOrElse(freshDelegate())
-    val inner = b.build()
-    if (partCols.isEmpty) inner
-    else {
-      val types = partCols.flatMap(c =>
-        fullSchema.fields.find(_.name.equalsIgnoreCase(c))
-          .map(f => c -> f.dataType))
-      new GraftScan(inner, plannedFiles, types,
-        paths => builderFor(paths).build())
-    }
-  }
+  /** The metadata-only aggregate when one was pushed, else the delegate
+    * parquet scan wrapped in a [[GraftScan]], partitioned or not. */
+  override def build(): Scan =
+    pushedAggScan.getOrElse(
+      new GraftScan(delegate.getOrElse(freshDelegate()).build()))
 }
 
 /** Driver-local scan carrying pre-computed aggregate rows — planned by

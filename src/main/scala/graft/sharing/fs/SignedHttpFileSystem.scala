@@ -21,10 +21,12 @@ import scala.jdk.OptionConverters._
   * (reference src/datasource/scan.rs:180-184, reader.rs:96-108). Here the
   * whole signed URL is encoded INTO the path:
   *
-  *   graftshare:///u/<base64url(signed-url)>/<size>/<filename>.parquet
+  *   graftshare:///t/<uid>[/k=v…]/f<url64>[.<refresh64>].<size>.parquet
   *
-  * so any Spark file source can scan it: `getFileStatus` answers from the
-  * path alone (zero HTTP), and `open` streams with HTTP Range requests —
+  * (`url64` the base64url signed URL, `k=v` hive-style partition values,
+  * `refresh64` an optional [[SignedHttpFileSystem.RefreshSpec]]; see
+  * `encode`), so any Spark file source can scan it: `getFileStatus`
+  * answers from the path alone (zero HTTP), and `open` streams with HTTP Range requests —
   * the same footer-then-column-chunks access pattern as the reference's
   * `AsyncFileReader` (reader.rs:25-49), but feeding Spark's vectorized
   * parquet reader. Executors resolve paths independently: nothing is

@@ -293,28 +293,11 @@ final class LocalSharingServer(
           // optional `version` query param (Delta Sharing time travel):
           // metadata as of that version — this fixture has one
           // schemaString per table, so only the version field varies,
-          // but the validation mirrors the query endpoint's. A malformed
-          // value is a 400, never silently ignored (serving LATEST for a
-          // garbled pin would be wrong data with no error).
-          queryParams(x).get("version") match {
-            case Some(raw) => raw.toLongOption match {
-              case None =>
-                respond(x, 400,
-                  s"""{"errorCode":"INVALID_PARAMETER_VALUE","message":${
-                    jstr(s"version must be a non-negative integer, got: $raw")}}""")
-              case Some(v) if v < 0 =>
-                respond(x, 400,
-                  s"""{"errorCode":"INVALID_PARAMETER_VALUE","message":${
-                    jstr(s"version must be a non-negative integer, got: $v")}}""")
-              case Some(v) if v > td.version =>
-                respond(x, 400,
-                  s"""{"errorCode":"INVALID_PARAMETER_VALUE","message":${
-                    jstr(s"requested version $v is newer than table version ${td.version}")}}""")
-              case Some(v) =>
-                respondNdjson(x, Seq(protocolLine(td), metadataLine(td, v)))
-            }
-            case None =>
-              respondNdjson(x, Seq(protocolLine(td), metadataLine(td)))
+          // but the validation is the query endpoint's
+          val pin = queryParams(x).get("version")
+            .map(raw => raw.toLongOption.toRight(raw))
+          withVersion(x, td, pin) { v =>
+            respondNdjson(x, Seq(protocolLine(td), metadataLine(td, v)))
           }
         }
       case List("shares", s, "schemas", sc, "tables", t, "changes") =>
@@ -380,46 +363,29 @@ final class LocalSharingServer(
           // THIS request's hints — the @volatile lastPredicateHints copy
           // is for test assertions only and races across worker threads
           val (predHints, _, versionReq) = recordHints(body)
-          versionReq match {
-            case Some(Left(raw)) =>
-              // Jackson's asLong() would coerce "abc" to 0 — a silent
-              // rewind-to-v0; malformed pins must be a hard 400
-              respond(x, 400,
-                s"""{"errorCode":"INVALID_PARAMETER_VALUE","message":${
-                  jstr(s"version must be a non-negative integer, got: $raw")}}""")
-            case Some(Right(v)) if v < 0 =>
-              respond(x, 400,
-                s"""{"errorCode":"INVALID_PARAMETER_VALUE","message":${
-                  jstr(s"version must be a non-negative integer, got: $v")}}""")
-            case Some(Right(v)) if v > td.version =>
-              respond(x, 400,
-                s"""{"errorCode":"INVALID_PARAMETER_VALUE","message":${
-                  jstr(s"requested version $v is newer than table version ${td.version}")}}""")
-            case _ =>
-              // Time travel (Delta Sharing protocol `version` in the query
-              // body — history the reference stubs entirely): the file list
-              // as of the requested version, rewound from the change log.
-              val effectiveVersion =
-                versionReq.flatMap(_.toOption).getOrElse(td.version)
-              val base =
-                if (effectiveVersion == td.version) td.files.zipWithIndex
-                else filesAt(td, effectiveVersion)
-              // jsonPredicateHints actually prune here (files with stats
-              // that provably contain no matching row are not listed) —
-              // best-effort by protocol contract, so clients must still
-              // re-filter. Indices stay ABSOLUTE so signed paths are stable
-              // under pruning.
-              val hintOp = predHints
-                .flatMap(graft.sharing.StatsPruning.parseHintJson)
-              val served = base.filter { case (f, _) =>
-                hintOp.forall(op =>
-                  graft.sharing.StatsPruning.mayMatch(op, f.stats))
-              }
-              respondNdjson(x,
-                Seq(protocolLine(td), metadataLine(td, effectiveVersion)) ++
-                  served.map { case (f, i) =>
-                    fileLine(s, sc, td, f, i, effectiveVersion)
-                  })
+          withVersion(x, td, versionReq) { effectiveVersion =>
+            // Time travel (Delta Sharing protocol `version` in the query
+            // body — history the reference stubs entirely): the file list
+            // as of the requested version, rewound from the change log.
+            val base =
+              if (effectiveVersion == td.version) td.files.zipWithIndex
+              else filesAt(td, effectiveVersion)
+            // jsonPredicateHints actually prune here (files with stats
+            // that provably contain no matching row are not listed) —
+            // best-effort by protocol contract, so clients must still
+            // re-filter. Indices stay ABSOLUTE so signed paths are stable
+            // under pruning.
+            val hintOp = predHints
+              .flatMap(graft.sharing.StatsPruning.parseHintJson)
+            val served = base.filter { case (f, _) =>
+              hintOp.forall(op =>
+                graft.sharing.StatsPruning.mayMatch(op, f.stats))
+            }
+            respondNdjson(x,
+              Seq(protocolLine(td), metadataLine(td, effectiveVersion)) ++
+                served.map { case (f, i) =>
+                  fileLine(s, sc, td, f, i, effectiveVersion)
+                })
           }
         }
       case _ =>
@@ -451,6 +417,26 @@ final class LocalSharingServer(
     lastPredicateHints = ph
     lastLimitHint = lh
     (ph, lh, vr)
+  }
+
+  /** Run `f` with the version a request pins (`Left` = not an integer),
+    * or the table's current version when it pins none. A malformed,
+    * negative or future pin is a 400, never silently ignored: serving
+    * LATEST, or v0 as Jackson's asLong() would read "abc", for a garbled
+    * pin would be wrong data with no error. */
+  private def withVersion(x: HttpExchange, td: TableDef,
+      pin: Option[Either[String, Long]])(f: Long => Unit): Unit = {
+    def bad(msg: String): Unit = respond(x, 400,
+      s"""{"errorCode":"INVALID_PARAMETER_VALUE","message":${jstr(msg)}}""")
+    pin match {
+      case Some(Left(raw)) =>
+        bad(s"version must be a non-negative integer, got: $raw")
+      case Some(Right(v)) if v < 0 =>
+        bad(s"version must be a non-negative integer, got: $v")
+      case Some(Right(v)) if v > td.version =>
+        bad(s"requested version $v is newer than table version ${td.version}")
+      case _ => f(pin.flatMap(_.toOption).getOrElse(td.version))
+    }
   }
 
   /** The table's file list as of version `v`, rewound from the current
@@ -499,8 +485,7 @@ final class LocalSharingServer(
     s"/data/${urlEnc(share)}/${urlEnc(schema)}/${urlEnc(td.name)}/$idx/${urlEnc(fileName)}"
 
   private def signedUrl(share: String, schema: String, td: TableDef,
-      f: ServedFile, idx: Int): String = {
-    val expires = System.currentTimeMillis() + urlTtl.toMillis
+      f: ServedFile, idx: Int, expires: Long): String = {
     val p = dataPath(share, schema, td, f.path.getFileName.toString, idx)
     s"http://127.0.0.1:$port$p?expires=$expires&sig=${sign(p, expires)}"
   }
@@ -521,18 +506,20 @@ final class LocalSharingServer(
     }
   }
 
-  private def queryParams(x: HttpExchange): Map[String, String] =
+  /** The request's `k=v` query parameters, each value passed through
+    * `value` (decoded by default). */
+  private def queryParams(x: HttpExchange,
+      value: String => String = dec): Map[String, String] =
     Option(x.getRequestURI.getQuery).getOrElse("")
       .split('&').filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); k -> dec(v) }.toMap
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> value(v) }.toMap
 
   private def serveData(x: HttpExchange): Unit = {
     // raw (still-encoded) path: signatures are computed over the exact
-    // path string embedded in the signed URL
+    // path string embedded in the signed URL, and `sig` is compared as
+    // sent
     val path = x.getRequestURI.getRawPath
-    val query = Option(x.getRequestURI.getQuery).getOrElse("")
-    val params = query.split('&').filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap
+    val params = queryParams(x, identity)
     val expires = params.get("expires").map(_.toLong).getOrElse(0L)
     val sig = params.getOrElse("sig", "")
     if (sig != sign(path, expires))
@@ -599,28 +586,28 @@ final class LocalSharingServer(
       s""""configuration":$conf,"version":$asOf}}"""
   }
 
+  private def partitionJson(f: ServedFile): String =
+    f.partitionValues.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
+
   private def fileLine(share: String, schema: String, td: TableDef,
       f: ServedFile, idx: Int, asOf: Long): String = {
-    val pv = f.partitionValues.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val expires = System.currentTimeMillis() + urlTtl.toMillis
+    val url = signedUrl(share, schema, td, f, idx, expires)
     val statsField = f.stats.map(s => s""""stats":${jstr(s)},""").getOrElse("")
     val extra = td.fileExtraJson.map(e => s"$e,").getOrElse("")
-    s"""{"file":{"url":${jstr(signedUrl(share, schema, td, f, idx))},"id":"${td.name}-$idx",""" +
-      s""""partitionValues":$pv,"size":${Files.size(f.path)},$statsField$extra""" +
+    s"""{"file":{"url":${jstr(url)},"id":"${td.name}-$idx",""" +
+      s""""partitionValues":${partitionJson(f)},"size":${Files.size(f.path)},$statsField$extra""" +
       s""""version":$asOf,"expirationTimestamp":$expires}}"""
   }
 
   private def changeLine(share: String, schema: String, td: TableDef,
       c: ChangeEntry, idx: Int): String = {
     val f = c.file
-    val pv = f.partitionValues.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val expires = System.currentTimeMillis() + urlTtl.toMillis
-    val p = dataPath(share, schema, td, f.path.getFileName.toString, 1000 + idx)
-    val url = s"http://127.0.0.1:$port$p?expires=$expires&sig=${sign(p, expires)}"
+    val url = signedUrl(share, schema, td, f, 1000 + idx, expires)
     s"""{"${c.changeType}":{"url":${jstr(url)},"id":"${td.name}-chg-$idx",""" +
-      s""""partitionValues":$pv,"size":${Files.size(f.path)},""" +
+      s""""partitionValues":${partitionJson(f)},"size":${Files.size(f.path)},""" +
       s""""timestamp":${c.timestamp},"version":${c.version},""" +
       s""""expirationTimestamp":$expires}}"""
   }
@@ -634,9 +621,7 @@ final class LocalSharingServer(
   // ---- pagination -------------------------------------------------------
 
   private def listPage(x: HttpExchange, items: Seq[String]): Unit = {
-    val query = Option(x.getRequestURI.getQuery).getOrElse("")
-    val params = query.split('&').filter(_.contains("="))
-      .map { kv => val Array(k, v) = kv.split("=", 2); k -> dec(v) }.toMap
+    val params = queryParams(x)
     val offset = params.get("pageToken").flatMap(_.toIntOption).getOrElse(0)
     val max = params.get("maxResults").flatMap(_.toIntOption).getOrElse(items.size)
     val page = items.slice(offset, offset + max)
