@@ -136,21 +136,33 @@ object Actions {
     expirationTimestamp = optLong(n, "expirationTimestamp"))
   }
 
-  /** Parse a metadata NDJSON body: protocol line + metaData line
-    * (reference get_table_metadata, client/mod.rs:283-319). */
-  def parseMetadataResponse(body: String): (Protocol, Metadata) = {
-    val lines = body.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
+  /** Parse an NDJSON response body in one pass: its protocol and
+    * metaData lines, then every other line through `action` (None drops
+    * it). The other lines are mapped only after both header lines
+    * parsed, so a missing header is reported before a bad action. */
+  private def parseNdjson[A](body: String)(
+      action: JsonNode => Option[A]): (Protocol, Metadata, Seq[A]) = {
     var protocol: Option[Protocol] = None
     var metadata: Option[Metadata] = None
-    lines.foreach { line =>
+    val rest = Seq.newBuilder[JsonNode]
+    body.split('\n').iterator.map(_.trim).filter(_.nonEmpty).foreach { line =>
       val n = mapper.readTree(line)
       if (n.has("protocol")) protocol = Some(parseProtocol(n.get("protocol")))
       else if (n.has("metaData")) metadata = Some(parseMetadata(n.get("metaData")))
+      else rest += n
     }
     (protocol.getOrElse(throw DeltaSharingException.parseResponse(
         "parsing protocol failed")),
       metadata.getOrElse(throw DeltaSharingException.parseResponse(
-        "parsing metadata failed")))
+        "parsing metadata failed")),
+      rest.result().flatMap(action))
+  }
+
+  /** Parse a metadata NDJSON body: protocol line + metaData line
+    * (reference get_table_metadata, client/mod.rs:283-319). */
+  def parseMetadataResponse(body: String): (Protocol, Metadata) = {
+    val (p, m, _) = parseNdjson(body)(_ => None)
+    (p, m)
   }
 
   /** One change-data-feed action: add / cdf / remove at a version. */
@@ -160,32 +172,31 @@ object Actions {
   /** Parse a table-changes NDJSON body: protocol, metaData, then
     * add/cdf/remove lines (public Delta Sharing CDF wire format — the
     * reference stubs this endpoint, src/client/mod.rs:384-386). */
-  def parseChangesResponse(body: String): (Protocol, Metadata, Seq[ChangeAction]) = {
-    val (p, m) = parseMetadataResponse(body)
-    val changes = body.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
-      .map(mapper.readTree)
-      .flatMap { n =>
-        Seq("add", "cdf", "remove").collectFirst {
-          case t if n.has(t) =>
-            val inner = n.get(t)
-            ChangeAction(t,
-              optLong(inner, "version").getOrElse(0L),
-              optLong(inner, "timestamp"),
-              parseFile(inner))
-        }
-      }.toSeq
-    (p, m, changes)
-  }
+  def parseChangesResponse(body: String): (Protocol, Metadata, Seq[ChangeAction]) =
+    parseNdjson(body) { n =>
+      Seq("add", "cdf", "remove").collectFirst {
+        case t if n.has(t) =>
+          val inner = n.get(t)
+          ChangeAction(t,
+            optLong(inner, "version").getOrElse(0L),
+            optLong(inner, "timestamp"),
+            parseFile(inner))
+      }
+    }
 
   /** Parse a query NDJSON body: protocol, metaData, then file lines
     * (reference get_table_data, client/mod.rs:322-382). */
-  def parseQueryResponse(body: String): (Protocol, Metadata, Seq[FileAction]) = {
-    val (p, m) = parseMetadataResponse(body)
-    val files = body.split('\n').iterator.map(_.trim).filter(_.nonEmpty)
-      .map(mapper.readTree)
-      .filter(_.has("file"))
-      .map(n => parseFile(n.get("file")))
-      .toSeq
-    (p, m, files)
-  }
+  def parseQueryResponse(body: String): (Protocol, Metadata, Seq[FileAction]) =
+    parseNdjson(body)(n => Option(n.get("file")).map(parseFile))
+
+  /** `s` as a JSON string literal: quotes, backslashes and control
+    * characters escaped. The one quoter of the client, the predicate
+    * hints and the local server. */
+  private[sharing] def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
 }

@@ -139,12 +139,7 @@ final class DeltaSharingClient(val profile: Profile,
       startingTimestamp: Option[String] = None): Long = {
     val base = tableUrl(table, "version")
     val url = startingTimestamp.fold(base)(ts => s"$base?startingTimestamp=${enc(ts)}")
-    val resp = send(() => HttpRequest.newBuilder(URI.create(url))
-      .header("Authorization", authHeader())
-      .header("delta-sharing-capabilities", "responseformat=parquet")
-      .GET().build())
-    checkStatus(resp)
-    resp.headers().firstValue("Delta-Table-Version").map[Long](_.toLong)
+    request(url).headers().firstValue("Delta-Table-Version").map[Long](_.toLong)
       .orElseThrow(() => DeltaSharingException.parseResponse(
         "missing Delta-Table-Version header"))
   }
@@ -157,12 +152,7 @@ final class DeltaSharingClient(val profile: Profile,
       version: Option[Long] = None): (Protocol, Metadata) = {
     val base = tableUrl(table, "metadata")
     val url = version.fold(base)(v => s"$base?version=$v")
-    val resp = send(() => HttpRequest.newBuilder(URI.create(url))
-      .header("Authorization", authHeader())
-      .header("delta-sharing-capabilities", "responseformat=parquet")
-      .GET().build())
-    checkStatus(resp)
-    Actions.parseMetadataResponse(resp.body())
+    Actions.parseMetadataResponse(request(url).body())
   }
 
   /** File listing with optional predicate + limit hints
@@ -173,16 +163,10 @@ final class DeltaSharingClient(val profile: Profile,
   def getTableData(table: TableRef, predicateHints: Option[String] = None,
       limitHint: Option[Long] = None,
       version: Option[Long] = None): (Protocol, Metadata, Seq[FileAction]) = {
-    val body = (predicateHints.map(p => "\"jsonPredicateHints\":" + jstr(p)) ++
+    val body = (predicateHints.map(p => "\"jsonPredicateHints\":" + Actions.jstr(p)) ++
       limitHint.map(l => "\"limitHint\":\"" + l + "\"") ++
       version.map(v => "\"version\":" + v)).mkString("{", ",", "}")
-    val resp = send(() => HttpRequest.newBuilder(URI.create(tableUrl(table, "query")))
-      .header("Authorization", authHeader())
-      .header("delta-sharing-capabilities", "responseformat=parquet")
-      .header("Content-Type", "application/json")
-      .POST(HttpRequest.BodyPublishers.ofString(body)).build())
-    checkStatus(resp)
-    Actions.parseQueryResponse(resp.body())
+    Actions.parseQueryResponse(request(tableUrl(table, "query"), Some(body)).body())
   }
 
   /** Change data feed between versions (inclusive). The reference stubs
@@ -207,13 +191,8 @@ final class DeltaSharingClient(val profile: Profile,
       : (Protocol, Metadata, Seq[Actions.ChangeAction]) = {
     val params = (Seq(startParam) ++
       endingVersion.map(v => s"endingVersion=$v")).mkString("&")
-    val resp = send(() => HttpRequest.newBuilder(
-        URI.create(s"${tableUrl(table, "changes")}?$params"))
-      .header("Authorization", authHeader())
-      .header("delta-sharing-capabilities", "responseformat=parquet")
-      .GET().build())
-    checkStatus(resp)
-    Actions.parseChangesResponse(resp.body())
+    Actions.parseChangesResponse(
+      request(s"${tableUrl(table, "changes")}?$params").body())
   }
 
   // ---- plumbing ---------------------------------------------------------
@@ -224,14 +203,6 @@ final class DeltaSharingClient(val profile: Profile,
 
   private def enc(s: String): String =
     java.net.URLEncoder.encode(s, "UTF-8").replace("+", "%20")
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private def sendOnce(req: HttpRequest): HttpResponse[String] =
     try http.send(req, HttpResponse.BodyHandlers.ofString())
@@ -318,14 +289,24 @@ final class DeltaSharingClient(val profile: Profile,
     }
   }
 
-  private def getJson(url: String): com.fasterxml.jackson.databind.JsonNode = {
-    val resp = send(() => HttpRequest.newBuilder(URI.create(url))
-      .header("Authorization", authHeader())
-      .header("delta-sharing-capabilities", "responseformat=parquet")
-      .GET().build())
+  /** One protocol request: GET, or POST of a JSON `body`, with the
+    * Authorization and `delta-sharing-capabilities` headers, sent with
+    * retry; a 4xx/5xx answer throws. */
+  private def request(url: String,
+      body: Option[String] = None): HttpResponse[String] = {
+    val resp = send { () =>
+      val b = HttpRequest.newBuilder(URI.create(url))
+        .header("Authorization", authHeader())
+        .header("delta-sharing-capabilities", "responseformat=parquet")
+      body.fold(b.GET())(j => b.header("Content-Type", "application/json")
+        .POST(HttpRequest.BodyPublishers.ofString(j))).build()
+    }
     checkStatus(resp)
-    mapper.readTree(resp.body())
+    resp
   }
+
+  private def getJson(url: String): com.fasterxml.jackson.databind.JsonNode =
+    mapper.readTree(request(url).body())
 
   /** Pagination loop (reference src/client/mod.rs:83-95): follow
     * nextPageToken until absent/empty. */

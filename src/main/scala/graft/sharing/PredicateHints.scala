@@ -22,22 +22,14 @@ object PredicateHints {
   sealed trait Op { def json: String }
 
   final case class ColumnOp(name: String, valueType: String) extends Op {
-    def json = s"""{"op":"column","name":${q(name)},"valueType":"$valueType"}"""
+    def json = s"""{"op":"column","name":${Actions.jstr(name)},"valueType":"$valueType"}"""
   }
   final case class LiteralOp(value: String, valueType: String) extends Op {
-    def json = s"""{"op":"literal","value":${q(value)},"valueType":"$valueType"}"""
+    def json = s"""{"op":"literal","value":${Actions.jstr(value)},"valueType":"$valueType"}"""
   }
   final case class NodeOp(op: String, children: Seq[Op]) extends Op {
     def json = s"""{"op":"$op","children":[${children.map(_.json).mkString(",")}]}"""
   }
-
-  private def q(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   /** IN-lists longer than this aren't hinted (wire-size guard). */
   val maxInList: Int = 16

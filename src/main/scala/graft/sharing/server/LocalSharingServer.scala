@@ -5,6 +5,7 @@ import java.net.InetSocketAddress
 import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
+import graft.sharing.Actions.jstr
 
 /** In-process Delta Sharing server over local parquet files.
   *
@@ -213,8 +214,7 @@ final class LocalSharingServer(
     try route(x)
     catch {
       case e: Exception =>
-        respond(x, 500,
-          s"""{"errorCode":"INTERNAL_ERROR","message":${jstr(e.toString)}}""")
+        error(x, 500, "INTERNAL_ERROR", e.toString)
     } finally x.close()
 
   private def route(x: HttpExchange): Unit = {
@@ -228,8 +228,7 @@ final class LocalSharingServer(
       if (failNextRequests > 0) {
         failNextRequests -= 1
         x.getResponseHeaders.set("Retry-After", "0")
-        return respond(x, failNextCode,
-          s"""{"errorCode":"THROTTLED","message":"injected $failNextCode"}""")
+        return error(x, failNextCode, "THROTTLED", s"injected $failNextCode")
       }
     }
 
@@ -241,8 +240,7 @@ final class LocalSharingServer(
       issuedTokens.get(t).exists(_.isAfter(java.time.Instant.now()))
     }
     if (!auth.contains(s"Bearer $bearerToken") && !issuedOk)
-      return respond(x, 401,
-        """{"errorCode":"UNAUTHENTICATED","message":"invalid bearer token"}""")
+      return error(x, 401, "UNAUTHENTICATED", "invalid bearer token")
 
     val rel = path.stripPrefix("/delta-sharing").stripPrefix("/")
     val segs = rel.split('/').filter(_.nonEmpty).map(dec).toList
@@ -263,29 +261,13 @@ final class LocalSharingServer(
       }
       case List("shares", s, "schemas", sc, "tables", t, "version") =>
         withTable(x, s, sc, t) { td =>
-          // startingTimestamp → earliest version whose change timestamp
-          // is at/after it (reference src/client/mod.rs:251-280 sends
-          // the param; Delta Sharing spec semantics).
-          queryParams(x).get("startingTimestamp") match {
-            case Some(ts) =>
-              val parsed = try Some(java.time.Instant.parse(ts).toEpochMilli)
-                catch { case _: java.time.format.DateTimeParseException => None }
-              parsed match {
-                case None => respond(x, 400,
-                  """{"errorCode":"INVALID_PARAMETER_VALUE","message":"startingTimestamp must be an ISO-8601 instant"}""")
-                case Some(wanted) =>
-                  td.changes.filter(_.timestamp >= wanted)
-                    .map(_.version).minOption match {
-                    case Some(v) =>
-                      x.getResponseHeaders.set("Delta-Table-Version", v.toString)
-                      respond(x, 200, "")
-                    case None => respond(x, 404,
-                      """{"errorCode":"RESOURCE_DOES_NOT_EXIST","message":"no version at or after startingTimestamp"}""")
-                  }
-              }
-            case None =>
-              x.getResponseHeaders.set("Delta-Table-Version", td.version.toString)
-              respond(x, 200, "")
+          // startingTimestamp (reference src/client/mod.rs:251-280 sends
+          // the param) answers the version it resolves to
+          val ts = queryParams(x).get("startingTimestamp")
+          withStartingTimestamp(x, td, ts) { v =>
+            x.getResponseHeaders.set("Delta-Table-Version",
+              v.getOrElse(td.version).toString)
+            respond(x, 200, "")
           }
         }
       case List("shares", s, "schemas", sc, "tables", t, "metadata") =>
@@ -312,40 +294,17 @@ final class LocalSharingServer(
           val badParam = Seq("startingVersion", "endingVersion").flatMap(p =>
             params.get(p).filter(!_.toLongOption.exists(_ >= 0)).map(p -> _))
             .headOption
-          // startingTimestamp (ISO-8601) is the protocol's alternative
-          // start bound: resolved to the earliest version committed at
-          // or after it. Mutually exclusive with startingVersion.
-          val startTs = params.get("startingTimestamp").map { raw =>
-            try Right(java.time.Instant.parse(raw).toEpochMilli)
-            catch { case _: Exception => Left(raw) }
-          }
+          val startTs = params.get("startingTimestamp")
           badParam match {
             case Some((p, raw)) =>
-              respond(x, 400,
-                s"""{"errorCode":"INVALID_PARAMETER_VALUE","message":${
-                  jstr(s"$p must be an integer, got: $raw")}}""")
-            case None if startTs.exists(_.isLeft) =>
-              respond(x, 400,
-                s"""{"errorCode":"INVALID_PARAMETER_VALUE","message":${
-                  jstr("startingTimestamp must be an ISO-8601 instant")}}""")
-            case None if startTs.isDefined &&
-                params.contains("startingVersion") =>
-              respond(x, 400,
-                s"""{"errorCode":"INVALID_PARAMETER_VALUE","message":${
-                  jstr("startingVersion and startingTimestamp are mutually exclusive")}}""")
-            case None if startTs.isDefined &&
-                !td.changes.exists(_.timestamp >= startTs.get.toOption.get) =>
-              respond(x, 404,
-                s"""{"errorCode":"RESOURCE_DOES_NOT_EXIST","message":${
-                  jstr("no version committed at or after startingTimestamp")}}""")
-            case None =>
-              val from = startTs match {
-                case Some(Right(wanted)) =>
-                  td.changes.filter(_.timestamp >= wanted)
-                    .map(_.version).min
-                case _ => params.get("startingVersion")
-                  .flatMap(_.toLongOption).getOrElse(0L)
-              }
+              error(x, 400, "INVALID_PARAMETER_VALUE", s"$p must be an integer, got: $raw")
+            // startingTimestamp is the protocol's alternative start bound
+            case None if startTs.isDefined && params.contains("startingVersion") =>
+              error(x, 400, "INVALID_PARAMETER_VALUE",
+                "startingVersion and startingTimestamp are mutually exclusive")
+            case None => withStartingTimestamp(x, td, startTs) { byTime =>
+              val from = byTime.getOrElse(params.get("startingVersion")
+                .flatMap(_.toLongOption).getOrElse(0L))
               val to = params.get("endingVersion").flatMap(_.toLongOption)
                 .getOrElse(Long.MaxValue)
               // index into the FULL changes list (lookupServed resolves
@@ -355,6 +314,7 @@ final class LocalSharingServer(
                 .filter { case (c, _) => c.version >= from && c.version <= to }
                 .map { case (c, i) => changeLine(s, sc, td, c, i) }
               respondNdjson(x, Seq(protocolLine(td), metadataLine(td)) ++ lines)
+            }
           }
         }
       case List("shares", s, "schemas", sc, "tables", t, "query") =>
@@ -389,8 +349,7 @@ final class LocalSharingServer(
           }
         }
       case _ =>
-        respond(x, 404,
-          """{"errorCode":"RESOURCE_DOES_NOT_EXIST","message":"no such endpoint"}""")
+        error(x, 404, "RESOURCE_DOES_NOT_EXIST", "no such endpoint")
     }
   }
 
@@ -426,8 +385,7 @@ final class LocalSharingServer(
     * pin would be wrong data with no error. */
   private def withVersion(x: HttpExchange, td: TableDef,
       pin: Option[Either[String, Long]])(f: Long => Unit): Unit = {
-    def bad(msg: String): Unit = respond(x, 400,
-      s"""{"errorCode":"INVALID_PARAMETER_VALUE","message":${jstr(msg)}}""")
+    def bad(msg: String): Unit = error(x, 400, "INVALID_PARAMETER_VALUE", msg)
     pin match {
       case Some(Left(raw)) =>
         bad(s"version must be a non-negative integer, got: $raw")
@@ -438,6 +396,24 @@ final class LocalSharingServer(
       case _ => f(pin.flatMap(_.toOption).getOrElse(td.version))
     }
   }
+
+  /** Run `f` with the version an ISO-8601 `startingTimestamp` resolves
+    * to, the earliest one committed at or after it, or with None when
+    * the request has no such parameter. A malformed instant is a 400;
+    * an instant after every commit is a 404. */
+  private def withStartingTimestamp(x: HttpExchange, td: TableDef,
+      ts: Option[String])(f: Option[Long] => Unit): Unit =
+    ts.map(t => scala.util.Try(java.time.Instant.parse(t).toEpochMilli)) match {
+      case None => f(None)
+      case Some(scala.util.Failure(_)) => error(x, 400, "INVALID_PARAMETER_VALUE",
+        "startingTimestamp must be an ISO-8601 instant")
+      case Some(scala.util.Success(wanted)) =>
+        td.changes.filter(_.timestamp >= wanted).map(_.version).minOption match {
+          case None => error(x, 404, "RESOURCE_DOES_NOT_EXIST",
+            "no version committed at or after startingTimestamp")
+          case v => f(v)
+        }
+    }
 
   /** The table's file list as of version `v`, rewound from the current
     * snapshot against the change log. A path's state at `v` is its state
@@ -523,12 +499,11 @@ final class LocalSharingServer(
     val expires = params.get("expires").map(_.toLong).getOrElse(0L)
     val sig = params.getOrElse("sig", "")
     if (sig != sign(path, expires))
-      return respond(x, 403, """{"errorCode":"FORBIDDEN","message":"bad signature"}""")
+      return error(x, 403, "FORBIDDEN", "bad signature")
     if (expires < System.currentTimeMillis())
-      return respond(x, 403, """{"errorCode":"FORBIDDEN","message":"url expired"}""")
+      return error(x, 403, "FORBIDDEN", "url expired")
     lookupServed(path) match {
-      case None =>
-        respond(x, 404, """{"errorCode":"RESOURCE_DOES_NOT_EXIST","message":"no such file"}""")
+      case None => error(x, 404, "RESOURCE_DOES_NOT_EXIST", "no such file")
       case Some(f) =>
         dataGets.incrementAndGet()
         val ch = FileChannel.open(f.path, StandardOpenOption.READ)
@@ -543,8 +518,7 @@ final class LocalSharingServer(
               sendSlice(x, ch, start, end - start + 1)
             case Some(None) =>
               x.getResponseHeaders.set("Content-Range", s"bytes */$len")
-              respond(x, 416,
-                """{"errorCode":"RANGE_NOT_SATISFIABLE","message":"range not satisfiable"}""")
+              error(x, 416, "RANGE_NOT_SATISFIABLE", "range not satisfiable")
             case None =>
               // length 0 means "chunked" to HttpExchange; -1 means no body
               x.sendResponseHeaders(200, if (len == 0) -1 else len)
@@ -637,24 +611,21 @@ final class LocalSharingServer(
       f: Map[String, Map[String, TableDef]] => Unit): Unit =
     tree.get(s) match {
       case Some(schemas) => f(schemas)
-      case None => respond(x, 404,
-        s"""{"errorCode":"RESOURCE_DOES_NOT_EXIST","message":${jstr(s"share $s not found")}}""")
+      case None => error(x, 404, "RESOURCE_DOES_NOT_EXIST", s"share $s not found")
     }
 
   private def withSchema(x: HttpExchange, s: String, sc: String)(
       f: Map[String, TableDef] => Unit): Unit =
     withShare(x, s)(schemas => schemas.get(sc) match {
       case Some(tables) => f(tables)
-      case None => respond(x, 404,
-        s"""{"errorCode":"RESOURCE_DOES_NOT_EXIST","message":${jstr(s"schema $sc not found")}}""")
+      case None => error(x, 404, "RESOURCE_DOES_NOT_EXIST", s"schema $sc not found")
     })
 
   private def withTable(x: HttpExchange, s: String, sc: String, t: String)(
       f: TableDef => Unit): Unit =
     withSchema(x, s, sc)(tables => tables.get(t) match {
       case Some(td) => f(td)
-      case None => respond(x, 404,
-        s"""{"errorCode":"RESOURCE_DOES_NOT_EXIST","message":${jstr(s"table $t not found")}}""")
+      case None => error(x, 404, "RESOURCE_DOES_NOT_EXIST", s"table $t not found")
     })
 
   private def respond(x: HttpExchange, code: Int, body: String): Unit = {
@@ -664,6 +635,11 @@ final class LocalSharingServer(
     if (bytes.nonEmpty) x.getResponseBody.write(bytes)
   }
 
+  /** Answer `code` with the protocol's `{errorCode, message}` body. */
+  private def error(x: HttpExchange, code: Int, errorCode: String,
+      message: String): Unit =
+    respond(x, code, s"""{"errorCode":"$errorCode","message":${jstr(message)}}""")
+
   private def respondNdjson(x: HttpExchange, lines: Seq[String]): Unit = {
     val bytes = lines.mkString("\n").getBytes("UTF-8")
     x.getResponseHeaders.set("Content-Type", "application/x-ndjson")
@@ -672,17 +648,6 @@ final class LocalSharingServer(
   }
 
   private def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 }
 
 object LocalSharingServer {
