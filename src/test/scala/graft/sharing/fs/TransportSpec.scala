@@ -6,6 +6,7 @@ import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -71,8 +72,13 @@ class TransportSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def footerPath(f: FileAction): Path =
     new Path(SignedHttpFileSystem.encode(f.url, f.size))
 
+  /** Open `p` as Spark does, with read options from `conf`: the
+    * one-argument `ParquetFileReader.open` builds its options from a new
+    * Hadoop `Configuration`, and parsing its default XML resources costs
+    * more than the footer read it would be timed with. */
   private def readFooterRows(p: Path): Long = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf),
+      HadoopReadOptions.builder(conf).build())
     try reader.getRecordCount finally reader.close()
   }
 
