@@ -40,6 +40,8 @@ object PlanAudit {
     // the signed URL (port, expiry, signature) encoded in a file name
     "/f[\\w-]+(?:\\.[\\w-]+)?(\\.\\d+\\.parquet)" -> "/f_$1",
     "(127\\.0\\.0\\.1|localhost):\\d+" -> "$1:_",
+    // RDD call sites: the line moves with every unrelated edit of its file
+    "(\\w+\\.scala):\\d+" -> "$1:_",
     // the checkout (warehouse tables live under it)
     java.util.regex.Pattern.quote("file:" + sys.props("user.dir") + "/") ->
       "file:./")

@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.V2Relation
 import org.apache.spark.sql.sources.Filter
 
-import graft.sharing.catalog.GraftTable
+import graft.sharing.catalog.{GraftScan, GraftTable}
+import graft.sharing.fs.SignedHttpFileSystem.Listing
 import graft.sharing.streaming.GraftCdfStream
 
 /** Connection-string entry point:
@@ -13,24 +14,28 @@ import graft.sharing.streaming.GraftCdfStream
   * (reference src/datasource/table.rs:93-103).
   *
   * Execution model (SURVEY §3.2, Spark-first). Every read is one DSv2
-  * relation, the one the catalog and the format reader plan:
+  * relation whose scan is a [[graft.sharing.catalog.GraftScan]], built
+  * from a file listing by the one function `GraftScan.table`:
   *  - driver: a snapshot read ([[readTable]]) is a [[GraftTable]], whose
   *    scan builder makes the REST file listing (with predicate/limit
   *    hints) when a query over the frame is planned — so each query newly
-  *    planned over an unpinned frame sees the table's current version;
+  *    planned over an unpinned frame sees the table's current version; a
+  *    change feed ([[readChanges]]) lists when it is called, and each
+  *    micro-batch of [[readChangesStream]] when it is planned;
   *  - each file becomes a self-contained `graftshare://` path — Spark
   *    plans one or more file partitions per file (NOT the reference's
   *    all-files-in-one-partition scan, src/datasource/scan.rs:77);
   *  - executors: Spark's vectorized parquet reader over HTTP Range
   *    reads; projection/filter pushdown reach the parquet scan natively;
-  *    a client built by `Profile.fromPath` re-lists URLs that expire
-  *    before a task reads them;
+  *    with a client built by `Profile.fromPath`, a URL that expires
+  *    before its task reads it is re-listed from the same snapshot or
+  *    change range, for snapshots and change feeds alike;
   *  - partition values (strings outside the files) ride in each path as
   *    hive-style `k=v` segments (empty string ⇒ NULL,
   *    src/datasource/scan.rs:191-229), so Spark's partition discovery
   *    types them from the table schema and a whole listing is ONE
-  *    parquet scan — the same path encoding as the change feed and the
-  *    CDF stream ([[graft.sharing.fs.SignedHttpFileSystem.encodeAll]]).
+  *    parquet scan — the change feed's CDF columns ride the same way
+  *    ([[graft.sharing.fs.SignedHttpFileSystem.encodeAll]]).
   */
 object GraftSharing {
 
@@ -74,7 +79,7 @@ object GraftSharing {
   def readChanges(spark: SparkSession, client: DeltaSharingClient,
       table: TableRef, startingVersion: Long,
       endingVersion: Option[Long] = None): DataFrame =
-    changesFrame(spark, table,
+    changesFrame(spark, client, table,
       client.getTableChanges(table, startingVersion, endingVersion),
       s"[$startingVersion, ${endingVersion.getOrElse("∞")}]")
 
@@ -85,13 +90,13 @@ object GraftSharing {
       client: DeltaSharingClient, table: TableRef,
       startingTimestamp: String,
       endingVersion: Option[Long] = None): DataFrame =
-    changesFrame(spark, table,
+    changesFrame(spark, client, table,
       client.getTableChangesByTimestamp(table, startingTimestamp,
         endingVersion),
       s"[$startingTimestamp, ${endingVersion.getOrElse("∞")}]")
 
-  private def changesFrame(spark: SparkSession, table: TableRef,
-      fetched: (Protocol, Metadata, Seq[Actions.ChangeAction]),
+  private def changesFrame(spark: SparkSession, client: DeltaSharingClient,
+      table: TableRef, fetched: (Protocol, Metadata, Seq[Actions.ChangeAction]),
       bounds: String): DataFrame = {
     val (_, metadata, changes) = fetched
     if (changes.isEmpty)
@@ -99,8 +104,10 @@ object GraftSharing {
     val columns = DeltaSchema.fromSchemaString(metadata.schemaString)
       .fieldNames.toSeq ++ Seq(GraftCdfStream.ChangeTypeCol,
         GraftCdfStream.VersionCol, GraftCdfStream.TimestampCol)
-    V2Relation.frame(spark, GraftCdfStream.changesTable(spark,
-        s"$table@changes$bounds", metadata, changes))
+    V2Relation.frame(spark, GraftScan.table(client, table,
+        s"$table@changes$bounds", GraftCdfStream.cdfSchema(metadata),
+        metadata.partitionColumns, Listing.of(changes),
+        GraftCdfStream.changeFiles(changes)))
       .select(columns.map(col): _*)
   }
 

@@ -10,7 +10,6 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownLimit, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.graftshim.V2Relation
 
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
@@ -20,7 +19,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sharing._
-import graft.sharing.fs.SignedHttpFileSystem
+import graft.sharing.fs.SignedHttpFileSystem.Listing
 
 /** DSv2 table over a shared Delta table (reference
   * src/datasource/table.rs:144-218), the one relation of every snapshot
@@ -91,9 +90,10 @@ final class GraftTable private[sharing] (client: DeltaSharingClient,
   * embed the signed URLs (+ hive-style partition-value segments), so
   * execution gets whole-stage codegen, vectorized decode, and
   * one-or-more splits per file — not the reference's single-partition
-  * scan (scan.rs:77). `build()` wraps it in a [[GraftScan]] for every
-  * snapshot read, partitioned or not, so a runtime (DPP) filter prunes
-  * through Spark's own file index, with Spark's semantics.
+  * scan (scan.rs:77). It is built by `GraftScan.table`, the one path of
+  * every connector read, so it is a [[GraftScan]], partitioned or not,
+  * and a runtime (DPP) filter prunes through Spark's own file index,
+  * with Spark's semantics.
   */
 final class GraftScanBuilder private[sharing] (client: DeltaSharingClient,
     ref: TableRef, metadata: Metadata, fullSchema: StructType,
@@ -109,12 +109,12 @@ final class GraftScanBuilder private[sharing] (client: DeltaSharingClient,
   private var requiredSchema: Option[StructType] = None
   private var catalystFilters: Seq[Expression] = Seq.empty
   private var limitHint: Option[Long] = None
-  private var delegate: Option[ParquetScanBuilder] = None
+  private var delegate: Option[ListingScanBuilder] = None
 
   /** Fire the (single) query POST with the seeds and every pushed hint,
-    * skip files by stats, then build the delegating parquet scan builder
-    * over the encoded paths and replay recorded pushdowns. */
-  private def freshDelegate(): ParquetScanBuilder = {
+    * skip files by stats, then build the delegating scan builder over
+    * the listing and replay recorded pushdowns. */
+  private def freshDelegate(): ListingScanBuilder = {
     val ops = (seedFilters.flatMap(PredicateHints.fromFilter(_, fullSchema)) ++
       catalystFilters.flatMap(PredicateHints.fromCatalyst(_, fullSchema)))
       .distinct
@@ -122,13 +122,9 @@ final class GraftScanBuilder private[sharing] (client: DeltaSharingClient,
       PredicateHints.toHintJson(ops), (seedLimit ++ limitHint).minOption,
       versionAsOf)
     val files = StatsPruning.prune(listed, ops)
-    val table = SignedHttpFileSystem.parquetTable(spark, ref.toString,
-      fullSchema, SignedHttpFileSystem.encodeAll(meta.partitionColumns,
-        files.map(_ -> Nil),
-        f => client.profile.path.map(pp => SignedHttpFileSystem.RefreshSpec(
-          pp, ref.share, ref.schema, ref.name, f.id, versionAsOf))), options)
-    val b = table.newScanBuilder(table.options)
-      .asInstanceOf[ParquetScanBuilder]
+    val b = GraftScan.table(client, ref, ref.toString, fullSchema,
+      meta.partitionColumns, Listing.Snapshot(versionAsOf),
+      files.map(_ -> Nil), options).newScanBuilder(options)
     requiredSchema.foreach(b.pruneColumns)
     if (catalystFilters.nonEmpty) b.pushFilters(catalystFilters)
     delegate = Some(b)
@@ -389,11 +385,10 @@ final class GraftScanBuilder private[sharing] (client: DeltaSharingClient,
     } catch { case _: Exception => None } // refusal is always safe
   }
 
-  /** The metadata-only aggregate when one was pushed, else the delegate
-    * parquet scan wrapped in a [[GraftScan]], partitioned or not. */
+  /** The metadata-only aggregate when one was pushed, else the
+    * delegate's [[GraftScan]], partitioned or not. */
   override def build(): Scan =
-    pushedAggScan.getOrElse(
-      new GraftScan(delegate.getOrElse(freshDelegate()).build()))
+    pushedAggScan.getOrElse(delegate.getOrElse(freshDelegate()).build())
 }
 
 /** Driver-local scan carrying pre-computed aggregate rows — planned by

@@ -5,11 +5,6 @@ import java.net.http.{HttpRequest, HttpResponse}
 import org.apache.hadoop.fs._
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.jdk.OptionConverters._
 
 /** Read-only Hadoop FileSystem for Delta Sharing pre-signed URLs, scheme
@@ -145,32 +140,58 @@ object SignedHttpFileSystem {
     * src/client/action.rs:196-200 is parsed but unused).
     *
     * The spec rides INSIDE the path (profile file path + table FQN +
-    * file id), so any executor can refresh independently — no driver
-    * state, no shared registry. The profile path must be readable on
-    * executors (true for distributed filesystems / secret mounts; the
-    * bearer token itself is never embedded in paths or logs).
+    * file id + the listing the file came from), so any executor can
+    * refresh independently — no driver state, no shared registry. The
+    * profile path must be readable on executors (true for distributed
+    * filesystems / secret mounts; the bearer token itself is never
+    * embedded in paths or logs). `expires` is the embedded URL's
+    * `expirationTimestamp`, so a stream starts from whichever of it and
+    * a cached fresh URL lives longer.
     */
   final case class RefreshSpec(profilePath: String, share: String,
       schema: String, table: String, fileId: String,
-      /** version-pinned (time travel) read: a refresh must re-list the
-        * SAME snapshot, or an executor racing a table update would read
-        * files from a different version than the plan. */
-      version: Option[Long] = None) {
+      listing: Listing = Listing.Snapshot(None),
+      expires: Option[Long] = None) {
     def serialized: String =
-      (Seq(profilePath, share, schema, table, fileId) ++
-        version.map(_.toString)).map(
-        java.net.URLEncoder.encode(_, "UTF-8")).mkString("|")
+      Seq(profilePath, share, schema, table, fileId, listing.token,
+        expires.fold("")(_.toString))
+        .map(java.net.URLEncoder.encode(_, "UTF-8")).mkString("|")
   }
 
   object RefreshSpec {
     def deserialize(s: String): RefreshSpec =
-      s.split('|').map(java.net.URLDecoder.decode(_, "UTF-8")) match {
-        case Array(p, sh, sc, t, id) => RefreshSpec(p, sh, sc, t, id)
-        case Array(p, sh, sc, t, id, v) =>
-          RefreshSpec(p, sh, sc, t, id, Some(v.toLong))
+      s.split("\\|", -1).map(java.net.URLDecoder.decode(_, "UTF-8")) match {
+        case Array(p, sh, sc, t, id, listing, exp) => RefreshSpec(p, sh, sc, t,
+          id, Listing.parse(listing), exp.toLongOption)
         case _ => throw new IllegalArgumentException(
           s"malformed refresh spec: $s")
       }
+  }
+
+  /** The listing a file's URL came from, which a refresh re-queries: a
+    * snapshot at `version` (None = latest; a version-pinned read must
+    * re-list the SAME snapshot, or an executor racing a table update
+    * would read files from a different version than the plan), or the
+    * changes of versions `[from, to]`. */
+  sealed trait Listing { def token: String }
+  object Listing {
+    final case class Snapshot(version: Option[Long]) extends Listing {
+      def token: String = version.fold("latest")(_.toString)
+    }
+    final case class Changes(from: Long, to: Long) extends Listing {
+      def token: String = s"$from-$to"
+    }
+    /** The changes a change listing returned, as the range from their
+      * first to their last version: re-listing it yields the same
+      * files, however the feed's start and end were given. */
+    def of(changes: Seq[graft.sharing.Actions.ChangeAction]): Listing =
+      Changes(changes.map(_.version).min, changes.map(_.version).max)
+    def parse(token: String): Listing = token.split('-') match {
+      case Array("latest") => Snapshot(None)
+      case Array(v) => Snapshot(Some(v.toLong))
+      case Array(from, to) => Changes(from.toLong, to.toLong)
+      case _ => throw new IllegalArgumentException(s"malformed listing: $token")
+    }
   }
 
   private[fs] def decodeRefresh(p: Path): Option[RefreshSpec] = {
@@ -200,23 +221,6 @@ object SignedHttpFileSystem {
           extra, uid, refresh(f))
     }
     (paths, s"graftshare:///t/$uid")
-  }
-
-  /** The one parquet table over a listing's encoded paths (the
-    * `(paths, basePath)` of [[encodeAll]]): `schema` types the data
-    * columns and every path segment, `options` are the caller's scan
-    * options, to which the `basePath` is added. Every read plans through
-    * it: the snapshot scan, the change feed and each CDF micro-batch. */
-  def parquetTable(spark: SparkSession, name: String, schema: StructType,
-      encoded: (Seq[String], String),
-      options: java.util.Map[String, String] = java.util.Map.of())
-      : ParquetTable = {
-    register(spark.sparkContext.hadoopConfiguration)
-    val (paths, base) = encoded
-    val opts = new java.util.HashMap[String, String](options)
-    opts.put("basePath", base)
-    ParquetTable(name, spark, new CaseInsensitiveStringMap(opts), paths,
-      Some(schema), classOf[ParquetFileFormat])
   }
 
   /** Hive path-name escaping: the character set of Spark's
@@ -260,7 +264,10 @@ object SignedHttpFileSystem {
   * `RefreshSpec` is present, the stream re-queries the sharing server for
   * a fresh URL ONCE and retries — the per-task refresh story the
   * reference lacks (action.rs:196-200 parsed but unused). Fresh URLs are
-  * cached per file id so a thousand tasks don't re-list a thousand times.
+  * cached per listing and file id so a thousand tasks don't re-list a
+  * thousand times. A stream starts from the cached URL only when it
+  * expires no earlier than the embedded one: a path from a newer listing
+  * than the cache's must not pay a 4xx and a re-list for a live URL.
   */
 final class SignedHttpInputStream(url: String, size: Long, chunkSize: Int,
     refresh: Option[SignedHttpFileSystem.RefreshSpec] = None)
@@ -269,9 +276,8 @@ final class SignedHttpInputStream(url: String, size: Long, chunkSize: Int,
   private var pos = 0L
   private var buf: Array[Byte] = Array.emptyByteArray
   private var bufStart = 0L
-  private var activeUrl = refresh.flatMap(r =>
-    SignedHttpInputStream.freshUrls.get(SignedHttpInputStream.cacheKey(r)))
-    .getOrElse(url)
+  private var activeUrl =
+    refresh.flatMap(SignedHttpInputStream.cachedUrl).getOrElse(url)
 
   /** Up to TWO refresh attempts per range read: the first may return a
     * CACHED fresh URL (populated by another stream's listing); if that
@@ -372,16 +378,18 @@ object SignedHttpInputStream {
     * files fit in it, so their two reads cost one GET. */
   private[fs] val tailWindow: Int = 64 * 1024
 
-  /** (table key # file id) → fresh signed URL, shared across streams in
-    * this JVM. Keyed per table snapshot so same-named files in different
-    * shares/versions can never serve each other's URLs. */
+  /** (listing key # file id) → fresh signed URL and its expiry, shared
+    * across streams in this JVM. Keyed per listing (a table snapshot, or
+    * a range of its changes) so same-named files in different
+    * shares/versions can never serve each other's URLs, and refreshing
+    * one listing never evicts another's. */
   private[fs] val freshUrls =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+    scala.collection.concurrent.TrieMap.empty[String, (String, Option[Long])]
 
-  /** One monitor per table snapshot: concurrent expired streams of the
-    * same table serialize on it, so the table is re-listed ONCE and
-    * everyone else reads the batch-populated cache — without it a
-    * thousand tasks racing a TTL would issue a thousand listings. */
+  /** One monitor per listing: concurrent expired streams of the same
+    * listing serialize on it, so it is re-listed ONCE and everyone else
+    * reads the batch-populated cache — without it a thousand tasks
+    * racing a TTL would issue a thousand listings. */
   private val refreshLocks =
     scala.collection.concurrent.TrieMap.empty[String, Object]
 
@@ -390,48 +398,60 @@ object SignedHttpInputStream {
   private[sharing] val refreshListings =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private def tableKey(r: SignedHttpFileSystem.RefreshSpec): String =
-    Seq(r.profilePath, r.share, r.schema, r.table,
-      r.version.map(_.toString).getOrElse("latest"))
+  private def listingKey(r: SignedHttpFileSystem.RefreshSpec): String =
+    Seq(r.profilePath, r.share, r.schema, r.table, r.listing.token)
       .map(java.net.URLEncoder.encode(_, "UTF-8")).mkString("|")
 
   private[fs] def cacheKey(r: SignedHttpFileSystem.RefreshSpec): String =
-    s"${tableKey(r)}#${r.fileId}"
+    s"${listingKey(r)}#${r.fileId}"
+
+  /** The cached fresh URL for `r`, unless the URL embedded in its path
+    * expires later: that one comes from a newer listing. */
+  private def cachedUrl(r: SignedHttpFileSystem.RefreshSpec): Option[String] =
+    freshUrls.get(cacheKey(r)).collect {
+      case (url, expires) if !Ordering[Option[Long]].gt(r.expires, expires) => url
+    }
 
   /** Test hook: forget all cached fresh URLs (JVM-wide state). */
   private[fs] def clearCache(): Unit = { freshUrls.clear(); refreshLocks.clear() }
 
   /** A fresh signed URL for `spec`, given that `failedUrl` just 4xx'd.
     *
-    * A table's URLs expire TOGETHER, so one `getTableData` listing
-    * batch-populates the cache for EVERY file of the table — N expired
-    * files cost one listing, not N (the round-5 review's thundering-herd
-    * finding). An entry equal to `failedUrl` is stale from an earlier
-    * refresh and is invalidated so a second expiry re-lists instead of
-    * replaying it. */
+    * A listing's URLs expire TOGETHER, so one re-query of the spec's
+    * listing (`getTableData` for a snapshot, `getTableChanges` for a
+    * change range) batch-populates the cache for EVERY file of it — N
+    * expired files cost one listing, not N (the round-5 review's
+    * thundering-herd finding). The fresh URL is picked by file id. An
+    * entry equal to `failedUrl`, or older than the path's own URL, is
+    * stale from an earlier refresh: it is dropped and the listing re-run,
+    * so a second expiry re-lists instead of replaying it. */
   private[fs] def refreshUrl(spec: SignedHttpFileSystem.RefreshSpec,
       failedUrl: String): String = {
-    val lock = refreshLocks.getOrElseUpdate(tableKey(spec), new Object)
+    val lock = refreshLocks.getOrElseUpdate(listingKey(spec), new Object)
     lock.synchronized {
-      val key = cacheKey(spec)
-      freshUrls.get(key) match {
+      cachedUrl(spec) match {
         case Some(cached) if cached != failedUrl =>
-          cached // another stream already re-listed this table
-        case stale =>
-          stale.foreach(_ => freshUrls.remove(key))
+          cached // another stream already re-listed this listing
+        case _ =>
+          freshUrls.remove(cacheKey(spec))
           refreshListings.incrementAndGet()
           val client = new graft.sharing.DeltaSharingClient(
             graft.sharing.Profile.fromPath(spec.profilePath))
-          val (_, _, files) = client.getTableData(
-            graft.sharing.TableRef(spec.share, spec.schema, spec.table),
-            version = spec.version)
-          // REPLACE this snapshot's key range rather than accreting:
+          val ref = graft.sharing.TableRef(spec.share, spec.schema, spec.table)
+          val files = spec.listing match {
+            case SignedHttpFileSystem.Listing.Snapshot(version) =>
+              client.getTableData(ref, version = version)._3
+            case SignedHttpFileSystem.Listing.Changes(from, to) =>
+              client.getTableChanges(ref, from, Some(to))._3.map(_.file)
+          }
+          // REPLACE this listing's key range rather than accreting:
           // files compacted/removed since the last refresh would
           // otherwise leave dead URL entries behind forever (the cache
           // lives for the executor JVM's lifetime)
-          val prefix = s"${tableKey(spec)}#"
+          val prefix = s"${listingKey(spec)}#"
           freshUrls.keys.filter(_.startsWith(prefix)).foreach(freshUrls.remove)
-          files.foreach(f => freshUrls.put(s"$prefix${f.id}", f.url))
+          files.foreach(f =>
+            freshUrls.put(s"$prefix${f.id}", f.url -> f.expirationTimestamp))
           files.find(_.id == spec.fileId).map(_.url).getOrElse(
             throw new java.io.IOException(
               s"file ${spec.fileId} no longer listed for ${spec.table} on refresh"))

@@ -3,18 +3,16 @@ package graft.sharing.streaming
 import java.util
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.sharing._
-import graft.sharing.catalog.SharingProvider
-import graft.sharing.fs.SignedHttpFileSystem
+import graft.sharing.catalog.{GraftScan, SharingProvider}
+import graft.sharing.fs.SignedHttpFileSystem.Listing
 
 /** Structured Streaming source that TAILS a shared table's change data
   * feed — the capability the reference stubs outright (its CDF endpoint
@@ -29,9 +27,11 @@ import graft.sharing.fs.SignedHttpFileSystem
   *  - **No custom reader**: the changed files become `graftshare://`
   *    paths whose hive-style segments carry the table's own partition
   *    values PLUS `_change_type`/`_commit_version`/`_commit_timestamp`,
-  *    and the batch is planned by Spark's stock `ParquetTable` — the CDF
+  *    and each batch is planned as a [[graft.sharing.catalog.GraftScan]]
+  *    by `GraftScan.table`, like every connector read — the CDF
   *    metadata columns materialize through ordinary partition discovery,
-  *    typed by the declared schema, vectorized end to end. A 1000-file
+  *    typed by the declared schema, vectorized end to end, and a URL
+  *    that expires before its task reads it is re-listed. A 1000-file
   *    commit plans 1000+ parallel splits; nothing but the version cursor
   *    is driver-state.
   *  - **Restart safety for free**: versions are monotone and the offset
@@ -94,17 +94,14 @@ object GraftCdfStream {
       StructField(TimestampCol, LongType, nullable = true)))
   }
 
-  /** The parquet table over a set of change files, typed by
-    * [[cdfSchema]]: the CDF columns ride as path segments after the
-    * table's partition values (a missing timestamp ⇒ NULL). The batch
-    * change feed and every micro-batch plan through it. */
-  def changesTable(spark: SparkSession, name: String, metadata: Metadata,
-      changes: Seq[Actions.ChangeAction]): ParquetTable =
-    SignedHttpFileSystem.parquetTable(spark, name, cdfSchema(metadata),
-      SignedHttpFileSystem.encodeAll(metadata.partitionColumns,
-        changes.map(c => c.file -> Seq(ChangeTypeCol -> c.changeType,
-          VersionCol -> c.version.toString,
-          TimestampCol -> c.timestamp.fold("")(_.toString)))))
+  /** A change listing's files, each with the CDF columns as path
+    * segments after the table's partition values (a missing timestamp ⇒
+    * NULL), typed by [[cdfSchema]] in the scan. */
+  def changeFiles(changes: Seq[Actions.ChangeAction])
+      : Seq[(FileAction, Seq[(String, String)])] =
+    changes.map(c => c.file -> Seq(ChangeTypeCol -> c.changeType,
+      VersionCol -> c.version.toString,
+      TimestampCol -> c.timestamp.fold("")(_.toString)))
 }
 
 final class GraftCdfStreamTable(client: DeltaSharingClient, ref: TableRef,
@@ -135,8 +132,6 @@ final case class VersionOffset(version: Long) extends Offset {
 final class GraftCdfMicroBatchStream(client: DeltaSharingClient,
     ref: TableRef, metadata: Metadata, startingVersion: Long)
   extends MicroBatchStream with SupportsTriggerAvailableNow {
-
-  private val spark = SparkSession.active
 
   // Trigger.AvailableNow pins the target version once at query start so
   // the run terminates even while the table keeps committing.
@@ -210,9 +205,10 @@ final class GraftCdfMicroBatchStream(client: DeltaSharingClient,
           "the new schema; the checkpoint cursor is preserved.")
     if (changes.isEmpty) { plannedFactory = Some(EmptyBatchFactory); return Array.empty }
 
-    val table = GraftCdfStream.changesTable(spark, s"$ref@changes[$from,$to]",
-      metadata, changes)
-    val batch = table.newScanBuilder(table.options).build().toBatch
+    val batch = GraftScan.table(client, ref, s"$ref@changes[$from,$to]",
+      GraftCdfStream.cdfSchema(metadata), metadata.partitionColumns,
+      Listing.of(changes), GraftCdfStream.changeFiles(changes))
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build().toBatch
     plannedFactory = Some(batch.createReaderFactory())
     batch.planInputPartitions()
   }

@@ -139,15 +139,16 @@ class ContractSpec extends AnyFunSuite {
         s"${unbenched.toSeq.sorted.mkString(", ")}")
   }
 
+  private def stripComments(src: String): String =
+    src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
+
   /** DataFrameReader relations in Scala source, comments stripped: a
     * `.read` chain ending in `.parquet(`, `.format("parquet")`, or a
     * `.load(` with no format (the session default is parquet). */
   private def v1ParquetReads(src: String): Seq[String] = {
-    val code = src.replaceAll("(?s)/\\*.*?\\*/", "")
-      .replaceAll("//[^\n]*", "")
     val chain =
       """\.read\b(?:\s*\.\s*\w+\s*(?:\((?:[^()]|\([^()]*\))*\))?)+""".r
-    chain.findAllIn(code).filter { c =>
+    chain.findAllIn(stripComments(src)).filter { c =>
       c.matches("""(?s).*\.\s*parquet\s*\(.*""") ||
         c.matches("""(?s).*\.\s*format\s*\(\s*"parquet".*""") ||
         (c.matches("""(?s).*\.\s*load\s*\(.*""") &&
@@ -155,11 +156,22 @@ class ContractSpec extends AnyFunSuite {
     }.toSeq
   }
 
+  /** Spark `ParquetTable` constructions in Scala source, comments
+    * stripped, each named by the last `def` before it. */
+  private def parquetTables(src: String): Seq[String] = {
+    val code = stripComments(src)
+    """\bParquetTable\s*\(""".r.findAllMatchIn(code).map { m =>
+      """\bdef\s+(\w+)""".r.findAllMatchIn(code.substring(0, m.start))
+        .map(_.group(1)).toSeq.lastOption.getOrElse("<no def>")
+    }.toSeq
+  }
+
   test("connector main code builds no v1 parquet relation") {
-    // every read in graft/sharing plans through one DSv2 scan: GraftTable
-    // for snapshots, SignedHttpFileSystem.parquetTable for change files.
-    // A DataFrameReader parquet relation forks a second path with no URL
-    // refresh, runtime filtering or stats answers.
+    // every read in graft/sharing plans through one DSv2 scan, the
+    // GraftScan that GraftScan.table builds from a listing: snapshots,
+    // change feeds and CDF micro-batches alike. A DataFrameReader
+    // parquet relation, or a bare ParquetTable, forks a second path with
+    // no URL refresh, runtime filtering or stats answers.
     assert(v1ParquetReads("""spark.read.schema(s).option("basePath", base)
       .parquet(paths: _*).select(cols: _*)""").size == 1)
     assert(v1ParquetReads("""spark.read.format("parquet").load(p)""").size == 1)
@@ -168,15 +180,25 @@ class ContractSpec extends AnyFunSuite {
       * and spark.read.parquet(p) in prose */
       spark.read.format("graft-sharing").load(p) // spark.read.parquet(p)
       ch.read(buf, at); spark.readStream.format("x").load()""").isEmpty)
+    assert(parquetTables("""def table(x: Int) = {
+      /** a ParquetTable(…) in prose */ val t = ParquetTable(name, spark,
+        opts, paths, Some(schema), classOf[ParquetFileFormat]) }
+      def changes() = new ParquetTable (n, s, o, p, None, f) // ParquetTable(
+      """) == Seq("table", "changes"))
     val root = java.nio.file.Paths.get("src/main/scala/graft/sharing")
     val walk = java.nio.file.Files.walk(root)
-    val hits =
+    val sources =
       try walk.iterator().asScala
         .filter(_.getFileName.toString.endsWith(".scala")).toSeq
-        .flatMap(f => v1ParquetReads(java.nio.file.Files.readString(f))
-          .map(c => s"$f: $c"))
+        .map(f => root.relativize(f).toString -> java.nio.file.Files.readString(f))
       finally walk.close()
+    val hits = sources.flatMap { case (f, src) =>
+      v1ParquetReads(src).map(c => s"$f: $c") }
     assert(hits.isEmpty, s"v1 parquet relations in connector code:\n" +
       hits.mkString("\n"))
+    val tables = sources.flatMap { case (f, src) =>
+      parquetTables(src).map(d => s"$f: def $d") }
+    assert(tables == Seq("catalog/GraftScan.scala: def table"),
+      "a ParquetTable built outside GraftScan.table:\n" + tables.mkString("\n"))
   }
 }

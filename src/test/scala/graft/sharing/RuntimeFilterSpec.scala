@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkTestBase
-import graft.sharing.catalog.GraftScan
+import graft.sharing.catalog.{GraftLocalScan, GraftScan}
 import graft.sharing.server.LocalSharingServer
 
 /** Dynamic partition pruning THROUGH the connector. Spark's v2 FileScan
@@ -49,8 +49,14 @@ class RuntimeFilterSpec extends SparkTestBase with BeforeAndAfterAll
         files: Seq[server.ServedFile]): Unit =
       server.addTable("dpp", "main", server.TableDef(name,
         DeltaSchema.toSchemaString(df.schema), part, files))
-    table("orders_part", orders, Seq("o_orderpriority"),
-      servedBy(orders, "o_orderpriority"))
+    val byPrio = servedBy(orders, "o_orderpriority")
+    table("orders_part", orders, Seq("o_orderpriority"), byPrio)
+    // its change feed: v1 adds every file, v2 removes the first
+    server.addTable("dpp", "main", server.TableDef("orders_part_cdf",
+      DeltaSchema.toSchemaString(orders.schema), Seq("o_orderpriority"),
+      byPrio.tail, version = 2L,
+      changes = byPrio.map(server.ChangeEntry(1L, "add", _, 1700000001000L)) :+
+        server.ChangeEntry(2L, "remove", byPrio.head, 1700000002000L)))
     val byTwo = Seq("o_orderpriority", "o_orderstatus")
     table("orders_prio_status", orders, byTwo, servedBy(orders, byTwo: _*))
     val years = servedBy(ordersByYear, "o_year")
@@ -142,6 +148,34 @@ class RuntimeFilterSpec extends SparkTestBase with BeforeAndAfterAll
         .foreach(line => assert(text.contains(line),
           s"$entry: no '$line' in\n$text"))
     }
+  }
+
+  test("every scan of a snapshot or a change feed is a GraftScan") {
+    val part = TableRef("dpp", "main", "orders_part")
+    val cdf = TableRef("dpp", "main", "orders_part_cdf")
+    val changes = GraftSharing.readChanges(spark, client, cdf, 1L)
+    val applied = GraftSharing.applyChanges(
+      GraftSharing.readTable(spark, client, part).limit(0), changes)
+    val frames = Seq(
+      "readTable" -> GraftSharing.readTable(spark, client, part)
+        .filter(col("o_orderpriority") =!= "5-LOW"),
+      "catalog SQL" -> spark.sql("SELECT o_orderpriority, count(*) " +
+        "FROM dpp.main.orders_part GROUP BY o_orderpriority"),
+      "readChanges" -> changes.filter(col("_change_type") === "add"),
+      "readChangesByTimestamp" -> GraftSharing.readChangesByTimestamp(
+        spark, client, cdf, java.time.Instant.ofEpochMilli(1700000001500L).toString),
+      "applyChanges" -> applied)
+    frames.foreach { case (entry, df) =>
+      df.collect()
+      val scans = collect(df.queryExecution.executedPlan) {
+        case b: BatchScanExec => b.scan }
+      assert(scans.nonEmpty && scans.forall(s =>
+        s.isInstanceOf[GraftScan] || s.isInstanceOf[GraftLocalScan]),
+        s"$entry executed ${scans.map(_.getClass.getSimpleName)}")
+    }
+    // v1 added every priority's file, v2 removed the first one's
+    assert(applied.count() ==
+      orders.filter(col("o_orderpriority") =!= "1-URGENT").count())
   }
 
   /** The same fact table through catalog SQL and through `readTable`:

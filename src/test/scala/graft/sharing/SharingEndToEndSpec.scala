@@ -1,6 +1,6 @@
 package graft.sharing
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.UnionExec
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
@@ -296,6 +296,16 @@ class SharingEndToEndSpec extends SparkTestBase with BeforeAndAfterAll {
     } finally shortServer.stop()
   }
 
+  /** The expiry recipe: `read` runs after its URLs were listed and
+    * expired; it must re-list exactly once and return `expected`. */
+  private def reListsOnce(read: () => Seq[Row], expected: DataFrame): Unit = {
+    Thread.sleep(600)
+    val before = SignedHttpInputStream.refreshListings.get()
+    val got = read()
+    assert(SignedHttpInputStream.refreshListings.get() == before + 1)
+    assert(got.map(_.toString).sorted == expected.collect().map(_.toString).sorted.toSeq)
+  }
+
   test("a readTable frame from a path profile re-lists URLs that expire after planning") {
     val shortServer = new LocalSharingServer(
       urlTtl = java.time.Duration.ofMillis(300))
@@ -307,12 +317,56 @@ class SharingEndToEndSpec extends SparkTestBase with BeforeAndAfterAll {
       val c = new DeltaSharingClient(Profile.fromPath(shortServer.writeProfile()))
       val df = GraftSharing.readTable(spark, c, TableRef("sh", "sc", "lineitem"))
       df.queryExecution.executedPlan // lists: the URLs expire 300 ms later
-      Thread.sleep(600)
-      val before = SignedHttpInputStream.refreshListings.get()
-      val got = df.collect()
-      assert(SignedHttpInputStream.refreshListings.get() == before + 1)
-      assert(got.map(_.toString).sorted.toSeq ==
-        direct.collect().map(_.toString).sorted.toSeq)
+      reListsOnce(() => df.collect().toSeq, direct)
+    } finally shortServer.stop()
+  }
+
+  test("change feeds from a path profile re-list URLs that expire after listing") {
+    val shortServer = new LocalSharingServer(
+      urlTtl = java.time.Duration.ofMillis(300))
+    val dir = java.nio.file.Files.createTempDirectory("graft-cdf-expiry").toString
+    val src = spark.read.parquet(s"$sf0001/lineitem.parquet")
+    Seq("even" -> 0, "odd" -> 1).foreach { case (sub, r) =>
+      src.filter(col("l_orderkey") % 2 === r).coalesce(1)
+        .write.mode("overwrite").parquet(s"$dir/$sub")
+    }
+    def served(sub: String) =
+      shortServer.ServedFile(shortServer.listParquet(s"$dir/$sub").head, Map.empty)
+    // v1 adds the even orders; v2 adds the odd ones and removes the even
+    val changes = Seq((1L, "add", "even"), (2L, "add", "odd"), (2L, "remove", "even"))
+    shortServer.addTable("sh", "sc", shortServer.TableDef("lineitem_cdf",
+      DeltaSchema.toSchemaString(src.schema), Seq.empty, Seq(served("odd")),
+      version = 2L, changes = changes.map { case (v, t, sub) =>
+        shortServer.ChangeEntry(v, t, served(sub), 1700000000000L + v * 1000) }))
+    shortServer.start()
+    /** spark.read.parquet over the change files from `version` on, with
+      * the change columns the feed adds. */
+    def direct(version: Long): DataFrame = changes.filter(_._1 >= version)
+      .map { case (v, t, sub) => spark.read.parquet(s"$dir/$sub")
+        .withColumn("_change_type", lit(t)).withColumn("_commit_version", lit(v))
+        .withColumn("_commit_timestamp", lit(1700000000000L + v * 1000)) }
+      .reduce(_ union _)
+    try {
+      val profilePath = shortServer.writeProfile()
+      val c = new DeltaSharingClient(Profile.fromPath(profilePath))
+      val ref = TableRef("sh", "sc", "lineitem_cdf")
+      // both batch feeds list when called: the URLs expire 300 ms later
+      val changesDf = GraftSharing.readChanges(spark, c, ref, startingVersion = 1L)
+      reListsOnce(() => changesDf.collect().toSeq, direct(1L))
+      val byTime = GraftSharing.readChangesByTimestamp(spark, c, ref,
+        java.time.Instant.ofEpochMilli(1700000001500L).toString)
+      reListsOnce(() => byTime.collect().toSeq, direct(2L))
+      // a micro-batch is listed before foreachBatch hands it over
+      val batches = new java.util.concurrent.atomic.AtomicInteger(0)
+      val checkpoint = java.nio.file.Files.createTempDirectory("graft-cdf-ckpt")
+      GraftSharing.readChangesStream(spark, profilePath, ref, startingVersion = 1L)
+        .writeStream.option("checkpointLocation", checkpoint.toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          batches.incrementAndGet()
+          reListsOnce(() => batch.collect().toSeq, direct(1L))
+        }.start().awaitTermination()
+      assert(batches.get == 1)
     } finally shortServer.stop()
   }
 }

@@ -8,12 +8,13 @@ import org.apache.hadoop.fs.Path
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sharing.{DeltaSharingClient, Profile, TableRef}
+import graft.sharing.{DeltaSharingClient, FileAction, Profile, TableRef}
 import graft.sharing.server.LocalSharingServer
 
 /** graftshare filesystem unit behavior: URL-refresh cache semantics
   * (batch populate from ONE listing, invalidate-on-4xx so a second
-  * expiry re-lists) and listStatus contract. */
+  * expiry re-lists, one cache range per listing, a newer embedded URL
+  * beating a stale cached one) and listStatus contract. */
 class SignedFsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   // two small served "files" with distinct content (the server serves raw
@@ -36,7 +37,11 @@ class SignedFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     server.addTable("sh", "sc", server.TableDef(
       "bins", """{"type":"struct","fields":[]}""", Seq.empty,
       files = Seq(server.ServedFile(fileA, Map.empty),
-        server.ServedFile(fileB, Map.empty))))
+        server.ServedFile(fileB, Map.empty)),
+      version = 2L,
+      changes = Seq(
+        server.ChangeEntry(1L, "add", server.ServedFile(fileA, Map.empty)),
+        server.ChangeEntry(2L, "add", server.ServedFile(fileB, Map.empty)))))
     server.start()
     profilePath = server.writeProfile()
     client = new DeltaSharingClient(Profile.fromPath(profilePath))
@@ -79,6 +84,63 @@ class SignedFsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sa2 = new SignedHttpInputStream(fa.url, 4096, 1 << 20, Some(spec(fa.id)))
     assert(readAt(sa2, 4000, 16).forall(_ == 'A'.toByte))
     assert(SignedHttpInputStream.refreshListings.get() == before + 2)
+  }
+
+  test("a path from a newer listing beats an expired cached URL") {
+    SignedHttpInputStream.clearCache()
+    val (_, _, files) = client.getTableData(table)
+    val fa = files.minBy(_.id)
+    Thread.sleep(700)
+    // one refreshed wave: the cache now holds URLs of that listing…
+    val sa = new SignedHttpInputStream(fa.url, 4096, 1 << 20, Some(spec(fa.id)))
+    assert(readAt(sa, 0, 16).forall(_ == 'A'.toByte))
+    val before = SignedHttpInputStream.refreshListings.get()
+    Thread.sleep(700) // …which expire
+    // a newer listing's live URL, with its expiry in the spec, is read
+    // as embedded: no 4xx on the dead cached URL, no re-list
+    val (_, _, relisted) = client.getTableData(table)
+    val fresh = relisted.find(_.id == fa.id).get
+    val s2 = new SignedHttpInputStream(fresh.url, 4096, 1 << 20,
+      Some(spec(fa.id).copy(expires = fresh.expirationTimestamp)))
+    assert(readAt(s2, 100, 16).forall(_ == 'A'.toByte))
+    assert(SignedHttpInputStream.refreshListings.get() == before)
+  }
+
+  test("a change listing re-lists its range and keeps the snapshot's URLs") {
+    SignedHttpInputStream.clearCache()
+    val before = SignedHttpInputStream.refreshListings.get()
+    val (_, _, files) = client.getTableData(table)
+    val (_, _, changes) = client.getTableChanges(table, 1L)
+    Thread.sleep(700) // every URL of both listings now expired
+    val Seq(fa, fb) = files.sortBy(_.id).toSeq
+    val Seq(ca, cb) = changes.sortBy(_.version).map(_.file)
+    def snapshotRead(f: FileAction) = readAt(new SignedHttpInputStream(
+      f.url, 4096, 1 << 20, Some(spec(f.id))), 0, 16)
+    def changeRead(f: FileAction) = readAt(new SignedHttpInputStream(
+      f.url, 4096, 1 << 20, Some(spec(f.id).copy(
+        listing = SignedHttpFileSystem.Listing.of(changes)))), 0, 16)
+    // one listing each: the change file's fresh URL comes from
+    // getTableChanges over [1, 2], picked by its change id
+    assert(snapshotRead(fa).forall(_ == 'A'.toByte))
+    assert(changeRead(cb).forall(_ == 'B'.toByte))
+    assert(SignedHttpInputStream.refreshListings.get() == before + 2)
+    // each refresh filled its own listing's range: neither evicted the other
+    assert(snapshotRead(fb).forall(_ == 'B'.toByte))
+    assert(changeRead(ca).forall(_ == 'A'.toByte))
+    assert(SignedHttpInputStream.refreshListings.get() == before + 2)
+  }
+
+  test("a refresh spec round-trips through its path segment") {
+    val specs = Seq(spec("bins-0"),
+      spec("bins-1").copy(listing = SignedHttpFileSystem.Listing.Snapshot(Some(3L)),
+        expires = Some(1700000000000L)),
+      spec("bins-chg-2").copy(listing = SignedHttpFileSystem.Listing.Changes(1L, 4L)))
+    specs.foreach { sp =>
+      val path = new Path(SignedHttpFileSystem.encode(
+        "http://127.0.0.1:1/x?sig=a|b", 123L, refresh = Some(sp)))
+      assert(SignedHttpFileSystem.decodeRefresh(path).contains(sp))
+      assert(SignedHttpFileSystem.decode(path) == ("http://127.0.0.1:1/x?sig=a|b", 123L))
+    }
   }
 
   test("concurrent expired streams of one table still re-list once") {
