@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The one way to build graft's Spark session: `local[n]` with `n`
   * shuffle partitions, UTC, AQE on (the Spark 4 default, stated so the
-  * plans never depend on it) and the UI off. Every main passes
+  * plans never depend on it), the UI off and [[functions.GraftExtensions]]
+  * installed, so SQL can call every graft function by name here and in
+  * each `newSession()` of this session. Every main passes
   * [[cpus]]; the test base passes a fixed 4 so specs see the same
   * partitioning on any host. */
 object GraftSession {
@@ -20,6 +22,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.functions.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -1,10 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftshim.ColumnExpr
 import org.apache.spark.sql.types._
 
 /** Fused float-vector kernels as native Catalyst expressions.
@@ -15,8 +19,8 @@ import org.apache.spark.sql.types._
   * a single fused loop in whole-stage codegen — the "custom Expression
   * beats UDF beats everything" tier for the similarity-search hot path.
   *
-  * Registered under `graft_dot` / `graft_cosine` via
-  * [[GraftFunctions.register]] (or `spark.sql.extensions=graft.functions.GraftExtensions`).
+  * Built by [[GraftFunctions.dot]] / [[GraftFunctions.cosine]], and by
+  * name (`graft_dot` / `graft_cosine`) in SQL through [[GraftExtensions]].
   * Null elements inside vectors are treated as 0.0f; a null vector yields
   * null (NullIntolerant).
   */
@@ -249,18 +253,29 @@ case class Sq8CosineFloat(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** One graft function: its SQL name, its expression class and the
+  * builder that makes its expression from the argument expressions. A
+  * builder reads only literal argument positions (the scalar
+  * parameters); each expression's `checkInputDataTypes` types the rest. */
+final case class GraftFunction(name: String, cls: Class[_ <: Expression],
+    build: Seq[Expression] => Expression) {
+
+  /** The Column-API call: this function's expression over the
+    * arguments' Catalyst expressions. No name is looked up, so the
+    * column works on any session. */
+  def apply(args: Column*): Column =
+    ColumnExpr.column(build(args.map(ColumnExpr.expression)) match {
+      case agg: AggregateFunction => agg.toAggregateExpression()
+      case e => e
+    })
+}
+
 object GraftFunctions {
-  private val registered =
-    java.util.Collections.newSetFromMap(
-      new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
 
-  /** Validated scalar parameter of a registered function: must be a
-    * foldable literal of the stated arity position — otherwise fail with
-    * a clear analysis-time message, not a deep Catalyst internal error
-    * (a user can call these from SQL with arbitrary expressions). */
-  private[functions] def litNumArgPublic(fn: String, exprs: Seq[Expression],
-      i: Int, what: String): Number = litNumArg(fn, exprs, i, what)
-
+  /** Scalar parameter `i` of a graft function: it must be a foldable
+    * numeric literal, else analysis fails with a clear message rather
+    * than a deep Catalyst internal error (SQL callers can pass any
+    * expression). */
   private def litNumArg(fn: String, exprs: Seq[Expression], i: Int,
       what: String): Number = {
     if (exprs.length <= i)
@@ -277,187 +292,117 @@ object GraftFunctions {
     }
   }
 
-  /** Idempotently register graft_dot / graft_cosine in the session's
-    * function registry so `expr("graft_cosine(a,b)")` resolves. */
-  def register(spark: SparkSession): Unit =
-    if (registered.add(graft.CacheRegistry.sessionToken(spark))) {
-      val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sessionState.functionRegistry
-      reg.createOrReplaceTempFunction("graft_dot",
-        exprs => DotProductFloat(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction("graft_cosine",
-        exprs => CosineSimilarityFloat(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction("graft_sq8_cosine",
-        exprs => Sq8CosineFloat(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction("graft_minhash",
-        exprs => MinHashSignature(exprs(0),
-          litNumArg("graft_minhash", exprs, 1, "numHashes").intValue), "built-in")
-      reg.createOrReplaceTempFunction("graft_simhash",
-        exprs => SimHash64(exprs(0)), "built-in")
-      reg.createOrReplaceTempFunction("graft_byte_entropy",
-        exprs => ByteEntropyStats(exprs(0)), "built-in")
-      reg.createOrReplaceTempFunction("graft_char_ngrams",
-        exprs => CharNgramHashes(exprs(0),
-          litNumArg("graft_char_ngrams", exprs, 1, "n").intValue), "built-in")
-      reg.createOrReplaceTempFunction("graft_cdc_chunks",
-        exprs => CdcChunkHashes(exprs(0)), "built-in")
-      reg.createOrReplaceTempFunction("graft_afp_syms",
-        exprs => AfpFrameSymbols(exprs(0), exprs(1)), "built-in")
-      reg.createOrReplaceTempFunction("graft_phash_dct",
-        exprs => PhashDct(exprs(0)), "built-in")
-      reg.createOrReplaceTempFunction("graft_vote_best",
-        exprs => VoteBestAgg(exprs(0),
-          litNumArg("graft_vote_best", exprs, 1, "minVotes").intValue),
-        "built-in")
-      reg.createOrReplaceTempFunction("graft_lsh_bands",
-        exprs => LshBandHashes(exprs(0),
-          litNumArg("graft_lsh_bands", exprs, 1, "numBands").intValue,
-          litNumArg("graft_lsh_bands", exprs, 2, "rowsPerBand").intValue),
-        "built-in")
-      reg.createOrReplaceTempFunction("graft_plane_dots",
-        exprs => HyperplaneDots(exprs(0), Hyperplanes.generate(
-          litNumArg("graft_plane_dots", exprs, 1, "numPlanes").intValue,
-          litNumArg("graft_plane_dots", exprs, 2, "dim").intValue,
-          litNumArg("graft_plane_dots", exprs, 3, "seed").longValue)), "built-in")
-      reg.createOrReplaceTempFunction("graft_lsh_keys",
-        exprs => {
-          val numTables = litNumArg("graft_lsh_keys", exprs, 1, "numTables").intValue
-          val bits = litNumArg("graft_lsh_keys", exprs, 2, "bitsPerTable").intValue
-          PackedLshKeys(exprs(0), Hyperplanes.generate(
-            numTables * bits,
-            litNumArg("graft_lsh_keys", exprs, 3, "dim").intValue,
-            litNumArg("graft_lsh_keys", exprs, 4, "seed").longValue), bits)
-        }, "built-in")
-      reg.createOrReplaceTempFunction("graft_hilbert",
-        exprs => HilbertIndex2D(exprs(0), exprs(1),
-          litNumArg("graft_hilbert", exprs, 2, "bits").intValue), "built-in")
-      reg.createOrReplaceTempFunction("graft_bloom_contains",
-        exprs => {
-          if (exprs.length != 2 || !exprs(0).foldable ||
-              exprs(0).dataType != BinaryType)
-            throw new IllegalArgumentException(
-              "graft_bloom_contains: arguments are (bloomBytes: binary " +
-                "literal, key: bigint)")
-          BloomMightContainLong(exprs(1),
-            exprs(0).eval().asInstanceOf[Array[Byte]])
-        }, "built-in")
-    }
+  private val dotFn = GraftFunction("graft_dot", classOf[DotProductFloat],
+    e => DotProductFloat(e(0), e(1)))
+  private val cosineFn = GraftFunction("graft_cosine",
+    classOf[CosineSimilarityFloat], e => CosineSimilarityFloat(e(0), e(1)))
+  private val sq8CosineFn = GraftFunction("graft_sq8_cosine",
+    classOf[Sq8CosineFloat], e => Sq8CosineFloat(e(0), e(1)))
+  private val minhashFn = GraftFunction("graft_minhash",
+    classOf[MinHashSignature], e => MinHashSignature(e(0),
+      litNumArg("graft_minhash", e, 1, "numHashes").intValue))
+  private val simhashFn = GraftFunction("graft_simhash", classOf[SimHash64],
+    e => SimHash64(e(0)))
+  private val byteEntropyFn = GraftFunction("graft_byte_entropy",
+    classOf[ByteEntropyStats], e => ByteEntropyStats(e(0)))
+  private val charNgramsFn = GraftFunction("graft_char_ngrams",
+    classOf[CharNgramHashes], e => CharNgramHashes(e(0),
+      litNumArg("graft_char_ngrams", e, 1, "n").intValue))
+  private val cdcChunksFn = GraftFunction("graft_cdc_chunks",
+    classOf[CdcChunkHashes], e => CdcChunkHashes(e(0)))
+  private val afpSymsFn = GraftFunction("graft_afp_syms",
+    classOf[AfpFrameSymbols], e => AfpFrameSymbols(e(0), e(1)))
+  private val phashDctFn = GraftFunction("graft_phash_dct", classOf[PhashDct],
+    e => PhashDct(e(0)))
+  private val voteBestFn = GraftFunction("graft_vote_best",
+    classOf[VoteBestAgg], e => VoteBestAgg(e(0),
+      litNumArg("graft_vote_best", e, 1, "minVotes").intValue))
+  private val lshBandsFn = GraftFunction("graft_lsh_bands",
+    classOf[LshBandHashes], e => LshBandHashes(e(0),
+      litNumArg("graft_lsh_bands", e, 1, "numBands").intValue,
+      litNumArg("graft_lsh_bands", e, 2, "rowsPerBand").intValue))
+  private val planeDotsFn = GraftFunction("graft_plane_dots",
+    classOf[HyperplaneDots], e => HyperplaneDots(e(0), Hyperplanes.generate(
+      litNumArg("graft_plane_dots", e, 1, "numPlanes").intValue,
+      litNumArg("graft_plane_dots", e, 2, "dim").intValue,
+      litNumArg("graft_plane_dots", e, 3, "seed").longValue)))
+  private val lshKeysFn = GraftFunction("graft_lsh_keys",
+    classOf[PackedLshKeys], e => {
+      val numTables = litNumArg("graft_lsh_keys", e, 1, "numTables").intValue
+      val bits = litNumArg("graft_lsh_keys", e, 2, "bitsPerTable").intValue
+      PackedLshKeys(e(0), Hyperplanes.generate(
+        numTables * bits,
+        litNumArg("graft_lsh_keys", e, 3, "dim").intValue,
+        litNumArg("graft_lsh_keys", e, 4, "seed").longValue), bits)
+    })
+  private val hilbertFn = GraftFunction("graft_hilbert",
+    classOf[HilbertIndex2D], e => HilbertIndex2D(e(0), e(1),
+      litNumArg("graft_hilbert", e, 2, "bits").intValue))
+  private val bloomContainsFn = GraftFunction("graft_bloom_contains",
+    classOf[BloomMightContainLong], e => {
+      if (e.length != 2 || !e(0).foldable || e(0).dataType != BinaryType)
+        throw new IllegalArgumentException(
+          "graft_bloom_contains: arguments are (bloomBytes: binary " +
+            "literal, key: bigint)")
+      BloomMightContainLong(e(1), e(0).eval().asInstanceOf[Array[Byte]])
+    })
 
-  /** Column-level API (safe on any session once register() ran). */
-  def dot(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_dot", a, b)
-  def cosine(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_cosine", a, b)
-  def sq8Cosine(a: Column, b: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_sq8_cosine", a, b)
-  def cdcChunks(t: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_cdc_chunks", t)
+  /** Every graft function, each declared once: the Column API below
+    * builds from these entries and [[GraftExtensions]] injects them into
+    * SQL. */
+  val table: Seq[GraftFunction] = Seq(dotFn, cosineFn, sq8CosineFn,
+    minhashFn, simhashFn, byteEntropyFn, charNgramsFn, cdcChunksFn,
+    afpSymsFn, phashDctFn, voteBestFn, lshBandsFn, planeDotsFn, lshKeysFn,
+    hilbertFn, bloomContainsFn)
+
+  /** Column-level API: each builds its expression directly, so it needs
+    * no set-up on any session. */
+  def dot(a: Column, b: Column): Column = dotFn(a, b)
+  def cosine(a: Column, b: Column): Column = cosineFn(a, b)
+  def sq8Cosine(a: Column, b: Column): Column = sq8CosineFn(a, b)
+  def cdcChunks(t: Column): Column = cdcChunksFn(t)
   /** array<struct<f:int,sym:bigint>> — fused audio-fingerprint frame
     * symbols of a 336-codepoint window (see [[AfpFrameSymbols]]). */
-  def afpSyms(w: Column, kind: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_afp_syms", w, kind)
+  def afpSyms(w: Column, kind: Column): Column = afpSymsFn(w, kind)
   /** struct<fp_lo:bigint,fp_hi:bigint> — fused integer 2D-DCT pHash of
     * a 256-entry pixel array (see [[PhashDct]]). */
-  def phashDct(pv: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_phash_dct", pv)
+  def phashDct(pv: Column): Column = phashDctFn(pv)
   /** array<struct<mb,votes,off>> — per-group best-offset vote aggregate
     * over caller-packed `mb*2^21 + (off+2^20)` keys (see [[VoteBestAgg]]). */
   def voteBest(packedKey: Column, minVotes: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_vote_best",
-      packedKey, org.apache.spark.sql.functions.lit(minVotes))
+    voteBestFn(packedKey, lit(minVotes))
   def minhash(shingleHashes: Column, numHashes: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_minhash",
-      shingleHashes, org.apache.spark.sql.functions.lit(numHashes))
-  def simhash64(tokenHashes: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_simhash", tokenHashes)
+    minhashFn(shingleHashes, lit(numHashes))
+  def simhash64(tokenHashes: Column): Column = simhashFn(tokenHashes)
   /** struct(entropy: double, n_distinct: int) — byte-level Shannon stats. */
-  def byteEntropy(text: Column): Column =
-    org.apache.spark.sql.functions.call_function("graft_byte_entropy", text)
+  def byteEntropy(text: Column): Column = byteEntropyFn(text)
   /** Distinct lowercased character-n-gram hashes (31-bit universe). */
-  def charNgrams(text: Column, n: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    org.apache.spark.sql.functions.call_function("graft_char_ngrams",
-      text, lit(n))
-  }
+  def charNgrams(text: Column, n: Int): Column = charNgramsFn(text, lit(n))
   /** Band hashes of a minhash signature (numBands entries). */
-  def lshBands(sig: Column, numBands: Int, rowsPerBand: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    org.apache.spark.sql.functions.call_function("graft_lsh_bands",
-      sig, lit(numBands), lit(rowsPerBand))
-  }
+  def lshBands(sig: Column, numBands: Int, rowsPerBand: Int): Column =
+    lshBandsFn(sig, lit(numBands), lit(rowsPerBand))
   /** All v·plane dots for `numPlanes` seeded gaussian planes. */
-  def planeDots(v: Column, numPlanes: Int, dim: Int, seed: Long): Column = {
-    import org.apache.spark.sql.functions.lit
-    org.apache.spark.sql.functions.call_function("graft_plane_dots",
-      v, lit(numPlanes), lit(dim), lit(seed))
-  }
+  def planeDots(v: Column, numPlanes: Int, dim: Int, seed: Long): Column =
+    planeDotsFn(v, lit(numPlanes), lit(dim), lit(seed))
   /** Packed multi-table LSH signature longs (numTables entries). */
   def lshKeys(v: Column, numTables: Int, bitsPerTable: Int, dim: Int,
-      seed: Long): Column = {
-    import org.apache.spark.sql.functions.lit
-    org.apache.spark.sql.functions.call_function("graft_lsh_keys",
-      v, lit(numTables), lit(bitsPerTable), lit(dim), lit(seed))
-  }
+      seed: Long): Column =
+    lshKeysFn(v, lit(numTables), lit(bitsPerTable), lit(dim), lit(seed))
   /** Hilbert-curve index of grid cell (x, y), each in [0, 2^bits). */
-  def hilbert(x: Column, y: Column, bits: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    org.apache.spark.sql.functions.call_function("graft_hilbert",
-      x, y, lit(bits))
-  }
+  def hilbert(x: Column, y: Column, bits: Int): Column =
+    hilbertFn(x, y, lit(bits))
   /** Bloom-filter membership probe over a serialized filter (bigint key). */
-  def bloomContains(bloomBytes: Array[Byte], key: Column): Column = {
-    import org.apache.spark.sql.functions.lit
-    org.apache.spark.sql.functions.call_function("graft_bloom_contains",
-      lit(bloomBytes), key)
-  }
+  def bloomContains(bloomBytes: Array[Byte], key: Column): Column =
+    bloomContainsFn(lit(bloomBytes), key)
 }
 
-/** `spark.sql.extensions=graft.functions.GraftExtensions` installs the
-  * vector kernels at session build time (the config-file route; code can
-  * also call GraftFunctions.register). */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    ext.injectFunction((FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProductFloat].getName, "graft_dot"),
-      exprs => DotProductFloat(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarityFloat].getName, "graft_cosine"),
-      exprs => CosineSimilarityFloat(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
-      exprs => MinHashSignature(exprs(0),
-        GraftFunctions.litNumArgPublic("graft_minhash", exprs, 1, "numHashes")
-          .intValue)))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-      exprs => SimHash64(exprs(0))))
-    ext.injectFunction((FunctionIdentifier("graft_plane_dots"),
-      new ExpressionInfo(classOf[HyperplaneDots].getName, "graft_plane_dots"),
-      exprs => HyperplaneDots(exprs(0), Hyperplanes.generate(
-        GraftFunctions.litNumArgPublic("graft_plane_dots", exprs, 1, "numPlanes").intValue,
-        GraftFunctions.litNumArgPublic("graft_plane_dots", exprs, 2, "dim").intValue,
-        GraftFunctions.litNumArgPublic("graft_plane_dots", exprs, 3, "seed").longValue))))
-    ext.injectFunction((FunctionIdentifier("graft_char_ngrams"),
-      new ExpressionInfo(classOf[CharNgramHashes].getName, "graft_char_ngrams"),
-      exprs => CharNgramHashes(exprs(0),
-        GraftFunctions.litNumArgPublic("graft_char_ngrams", exprs, 1, "n")
-          .intValue)))
-    ext.injectFunction((FunctionIdentifier("graft_lsh_bands"),
-      new ExpressionInfo(classOf[LshBandHashes].getName, "graft_lsh_bands"),
-      exprs => LshBandHashes(exprs(0),
-        GraftFunctions.litNumArgPublic("graft_lsh_bands", exprs, 1, "numBands").intValue,
-        GraftFunctions.litNumArgPublic("graft_lsh_bands", exprs, 2, "rowsPerBand").intValue)))
-    ext.injectFunction((FunctionIdentifier("graft_lsh_keys"),
-      new ExpressionInfo(classOf[PackedLshKeys].getName, "graft_lsh_keys"),
-      exprs => {
-        val numTables = GraftFunctions.litNumArgPublic("graft_lsh_keys", exprs, 1, "numTables").intValue
-        val bits = GraftFunctions.litNumArgPublic("graft_lsh_keys", exprs, 2, "bitsPerTable").intValue
-        PackedLshKeys(exprs(0), Hyperplanes.generate(
-          numTables * bits,
-          GraftFunctions.litNumArgPublic("graft_lsh_keys", exprs, 3, "dim").intValue,
-          GraftFunctions.litNumArgPublic("graft_lsh_keys", exprs, 4, "seed").longValue), bits)
-      }))
-  }
+/** `spark.sql.extensions=graft.functions.GraftExtensions` (or
+  * `withExtensions`, as `graft.GraftSession` does) makes every entry of
+  * [[GraftFunctions.table]] callable by name from SQL. */
+class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.table.foreach { f =>
+      ext.injectFunction((FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build))
+    }
 }

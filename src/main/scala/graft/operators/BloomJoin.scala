@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{QueryDef, Tables}
@@ -39,11 +39,9 @@ object BloomJoin {
     * 1% of non-matching fact rows still reach the exchange.
     */
   def bloomReduceJoin(
-      spark: SparkSession,
       fact: DataFrame, factKey: String,
       dim: DataFrame, dimKey: String,
       fpp: Double = 0.01): DataFrame = {
-    GraftFunctions.register(spark)
     // One action on the dim side to size the filter, one treeAggregate to
     // build it. Both scan only the SMALL side — the fact side (the 100 TB
     // one) is touched exactly once, by the reduced join itself.
@@ -76,7 +74,7 @@ object BloomJoin {
         .filter(col("o_orderpriority") === "1-URGENT" &&
           col("o_orderstatus") === "O")
         .select("o_orderkey", "o_orderdate")
-      bloomReduceJoin(s, Tables.lineitem(s, d), "l_orderkey", dim, "o_orderkey")
+      bloomReduceJoin(Tables.lineitem(s, d), "l_orderkey", dim, "o_orderkey")
         .groupBy(year(col("o_orderdate")).as("y"))
         .agg(
           sum((col("l_extendedprice") * (lit(1) - col("l_discount")))

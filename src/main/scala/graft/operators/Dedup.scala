@@ -86,11 +86,8 @@ object Dedup {
   }
 
   /** Production char-n-gram hashes: the one-pass native kernel. */
-  def charNgramHashes(text: Column, n: Int): Column = {
-    graft.functions.GraftFunctions.register(
-      org.apache.spark.sql.SparkSession.active)
+  def charNgramHashes(text: Column, n: Int): Column =
     graft.functions.GraftFunctions.charNgrams(text, n)
-  }
 
   /** 64 MinHash values for an array of 31-bit shingle hashes.
     *
@@ -113,13 +110,9 @@ object Dedup {
   }
 
   /** Production MinHash: the fused native kernel (identical values to
-    * [[minhashSignatureHof]], asserted in DedupSpec). Registers the
-    * function on first use. */
-  def minhashSignature(spark: SparkSession, hashedShingles: Column,
-      numHashes: Int = 64): Column = {
-    graft.functions.GraftFunctions.register(spark)
+    * [[minhashSignatureHof]], asserted in DedupSpec). */
+  def minhashSignature(hashedShingles: Column, numHashes: Int = 64): Column =
     graft.functions.GraftFunctions.minhash(hashedShingles, numHashes)
-  }
 
   /** LSH bands: split the signature into `bands` groups of `rowsPerBand`
     * and hash each group. Equal band-hash ⇒ candidate pair. HOF
@@ -172,17 +165,12 @@ object Dedup {
     // joined thrice; here MEMORY_AND_DISK serves the same role.
     // Small parquet inputs arrive as a single split; the signature pass
     // is CPU-bound per row, so spread it across the cluster first.
-    val spark = docs.sparkSession
-    // register the native kernels on THIS frame's session (the shingler
-    // helpers can only reach SparkSession.active, which may differ in
-    // multi-session apps)
-    graft.functions.GraftFunctions.register(spark)
-    val par = spark.sparkContext.defaultParallelism
+    val par = docs.sparkSession.sparkContext.defaultParallelism
     val withSig = graft.CacheRegistry.register(docs.repartition(par)
       .select(col(idCol).as("doc_id"),
         shingler(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
-      .withColumn("sig", minhashSignature(spark, col("sh"), numHashes))
+      .withColumn("sig", minhashSignature(col("sh"), numHashes))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
     // r15 (guide §2.4, the q_itemset_pairs recipe): ONE (band, bh)-keyed
@@ -582,11 +570,9 @@ object Dedup {
 
   /** Production SimHash: fused native kernel over the token-hash array
     * (identical values to [[simhashHof]], asserted in DedupSpec). */
-  def simhash(spark: SparkSession, text: Column): Column = {
-    graft.functions.GraftFunctions.register(spark)
+  def simhash(text: Column): Column =
     graft.functions.GraftFunctions.simhash64(
       transform(split(text, " "), t => xxhash64(t)))
-  }
 
   /** SimHash near-dup pairs: band the 64-bit fingerprint into 4 16-bit
     * chunks; Hamming distance ≤ 3 guarantees ≥1 equal chunk (pigeonhole),
@@ -595,10 +581,9 @@ object Dedup {
       maxHamming: Int = 3): DataFrame = {
     // persist: the fingerprint pass feeds both sides of the self-join;
     // repartition first — the fingerprint is CPU-bound per row
-    val spark = docs.sparkSession
-    val par = spark.sparkContext.defaultParallelism
+    val par = docs.sparkSession.sparkContext.defaultParallelism
     val fp = graft.CacheRegistry.register(docs.repartition(par)
-      .select(col(idCol).as("doc_id"), simhash(spark, col(textCol)).as("fp"))
+      .select(col(idCol).as("doc_id"), simhash(col(textCol)).as("fp"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val chunks = fp.select(col("doc_id"), col("fp"),
       explode(array((0 until 4).map { c =>
@@ -1048,15 +1033,13 @@ object Dedup {
       bands: Int = 16,
       maxBucketSize: Int = 1000,
       estMargin: Double = 0.3): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val rowsPerBand = numHashes / bands
-    val par = spark.sparkContext.defaultParallelism
+    val par = docs.sparkSession.sparkContext.defaultParallelism
     val withSig = graft.CacheRegistry.register(docs.repartition(par)
       .select(col(idCol).as("doc_id"), isNew.as("is_new"),
         shingleHashes(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
-      .withColumn("sig", minhashSignature(spark, col("sh"), numHashes))
+      .withColumn("sig", minhashSignature(col("sh"), numHashes))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // r15 (guide §2.4, the minhashPairs bucket-basket recipe): ONE
     // (band, bh)-keyed aggregate collects each bucket's new/old member
@@ -1135,8 +1118,7 @@ object Dedup {
       .select(col(idCol).as("doc_id"),
         shingleHashes(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
-      .withColumn("sig",
-        minhashSignature(docs.sparkSession, col("sh"), numHashes))
+      .withColumn("sig", minhashSignature(col("sh"), numHashes))
 
   /** Band-bucket rows of the persisted index: one row per (doc, band),
     * hash-partitioned on `bkp = pmod(bh, bucketParts)` so a probe's

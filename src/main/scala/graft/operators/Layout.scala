@@ -73,7 +73,6 @@ object Layout {
     // diagonal seam-jumps for unaligned ranges. The oracle unrolls the
     // identical bit walk in SQL, so the gate hash-checks every index.
     QueryDef.sql("q_hilbert_layout", hilbertOracle) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       Tables.orders(s, d)
         .withColumn("cx", col("o_custkey") % 256)
         .withColumn("cy", col("o_orderkey") % 256)

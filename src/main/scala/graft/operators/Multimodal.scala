@@ -818,7 +818,6 @@ object Multimodal {
           |  s.chunk_jaccard, s.caught, c.catch_ok, c.grid_blind_ok
           |FROM scored s, cert c ORDER BY s.media_id""".stripMargin
       }) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val media = graft.CacheRegistry.register(
         Tables.documentsPar(s, d)
           .select(col("doc_id"),
@@ -1067,7 +1066,6 @@ object Multimodal {
       // pushed them through a 64-column map-side-combined aggregate —
       // an exchange of a 16×-fanned frame per run; the fingerprint is
       // now a map-only projection over the persisted pixel arrays.
-      graft.functions.GraftFunctions.register(s)
       val fp = graft.CacheRegistry.register(docsW
         .select(col("doc_id"), col("kind"),
           graft.functions.GraftFunctions.phashDct(col("pv")).as("f"))
@@ -1593,7 +1591,6 @@ object Multimodal {
       // break the digit-length packing behind the 87809
       // hash-injectivity bound (r13 ADVICE). The clamp ENFORCES the
       // byte-64 sample convention instead of assuming an ASCII corpus.
-      graft.functions.GraftFunctions.register(s)
       val docsW = Tables.documents(s, d)
           .filter(docsFilter)
           .select(col("doc_id"), substring(col("text"), 1, 336).as("w"))

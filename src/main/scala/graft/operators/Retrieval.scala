@@ -73,7 +73,6 @@ object Retrieval {
 
   /** Exact dense scores vs query vector 0 (doc_id, sim) — the `dsc` CTE. */
   private def denseScored(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val q = broadcast(emb.filter(col("vec_id") === 0)
       .select(col("embedding").as("q_emb")))
@@ -317,7 +316,6 @@ object Retrieval {
         |        OVER (ORDER BY margin DESC, src, tgt) AS rk
         |      FROM m)
         |WHERE rk <= 20 ORDER BY rk""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val x = emb.filter(col("label") === 0)
         .select(col("vec_id").as("src"), col("embedding").as("x_emb"))

@@ -90,7 +90,6 @@ object Similarity {
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     // fused codegen kernel (graft.functions.CosineSimilarityFloat) on the
     // hot path — one loop per row instead of zip_with+aggregate arrays
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb")))
     ensureParallel(corpus)
@@ -116,7 +115,6 @@ object Similarity {
     // fused codegen kernel (graft.functions.Sq8CosineFloat) on the hot
     // path — one loop per row; the HOF formulation below is the parity
     // reference
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(queries.select(col("vec_id").as("query_id"),
       col("embedding").as("q_emb")))
     ensureParallel(corpus)
@@ -168,7 +166,6 @@ object Similarity {
     * projection + posexplode (the table index IS the array position). */
   private def lshKeyed(df: DataFrame, idFrom: String, idAs: String,
       embAs: String, numTables: Int, bitsPerTable: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     ensureParallel(df)
       .select(col(idFrom).as(idAs), col("embedding").as(embAs),
         posexplode(graft.functions.GraftFunctions.lshKeys(
@@ -193,7 +190,6 @@ object Similarity {
       numTables, bitsPerTable)
     val queryKeys = lshKeyed(queries, "vec_id", "query_id", "q_emb",
       numTables, bitsPerTable)
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // Score BEFORE dedup: a pair found in several tables recomputes the
     // (cheap) cosine, but the multi-table dedup then shuffles only
     // narrow (query, vec, sim) rows — never the embedding arrays. The
@@ -226,7 +222,6 @@ object Similarity {
     * cosine rerank of the top-`pool` candidates. */
   def binaryQuantTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       pool: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // bit i of word w = [component 32w+i >= 0]; sum of shiftleft(1L, i)
     // for i < 32 stays under 2^32 — exact everywhere
     def word(c: String, w: Int): Column = expr(
@@ -258,7 +253,6 @@ object Similarity {
 
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
       numCells: Int = 32, nprobe: Int = 4, dim: Int = 64): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     ivfServe(ivfAssignments(corpus, numCells, dim),
       queries, k, numCells, nprobe, dim)
   }
@@ -313,7 +307,6 @@ object Similarity {
     * the artifact sim_ivf_prebuilt persists partitioned by cell. */
   private[graft] def ivfAssignments(corpus: DataFrame,
       numCells: Int, dim: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     // struct ordering is lexicographic → array_max picks the best-dot cell
     ensureParallel(corpus)
       .select(col("vec_id"), col("embedding"),
@@ -325,7 +318,6 @@ object Similarity {
     * fans out to its `nprobe` best cells, exact cosine inside them. */
   private[operators] def ivfServe(index: DataFrame, queries: DataFrame,
       k: Int, numCells: Int, nprobe: Int, dim: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(queries.sparkSession)
     val queryProbes = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
         explode(transform(
@@ -665,7 +657,6 @@ object Similarity {
     * the vector-space twin of MinHash dedup. Never an all-pairs product. */
   def cosinePairs(corpus: DataFrame, threshold: Double,
       numTables: Int = 16, bitsPerTable: Int = 6): DataFrame = {
-    graft.functions.GraftFunctions.register(corpus.sparkSession)
     val keyed = graft.CacheRegistry.register(
       lshKeyed(corpus, "vec_id", "vec_id", "embedding",
           numTables, bitsPerTable)
@@ -775,7 +766,6 @@ object Similarity {
   def semanticDedup(embDf: DataFrame, k: Int = 8, iters: Int = 2,
       threshold: Double = 0.3,
       assignedOpt: Option[DataFrame] = None): DataFrame = {
-    graft.functions.GraftFunctions.register(embDf.sparkSession)
     // two consumers (pair join input and final keep flags) — persist so
     // the iterative k-means runs once
     val assigned = graft.CacheRegistry.register(
@@ -856,7 +846,6 @@ object Similarity {
     * explicit literal — `1 − 0.7` in IEEE is 0.30000000000000004). */
   def mmrDiversify(emb: DataFrame, queryId: Long, pool: Int, k: Int)
       : DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     // localCheckpoint, not persist: the greedy chain references cand/p/
     // result many times per step, so the LOGICAL plan (with the corpus
     // scoring scan inside) would nest multiplicatively and Catalyst
@@ -918,7 +907,6 @@ object Similarity {
     * tiebreak; localCheckpoint per round cuts the plan-nesting blowup
     * (the graph_kcore lesson). */
   def kcenterCoreset(emb: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(emb.sparkSession)
     val e = emb.select(col("vec_id"), col("embedding")).localCheckpoint()
     // `result` CARRIES the selected embeddings (the argmax row keeps its
     // vector), so each round broadcasts the <=k-row selection directly —
@@ -1157,7 +1145,6 @@ object Similarity {
         |  CAST(COUNT(*) AS BIGINT) AS n_pairs,
         |  CAST(SUM(CAST(sim AS DECIMAL(10,4))) AS DOUBLE) AS sum_sim
         |FROM p GROUP BY 1 ORDER BY bin""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       // orderBy+limit compiles to TakeOrdered (per-partition top-k +
       // merge) — an unpartitioned row_number window would single-
       // partition-sort the whole corpus just to take 100 rows
@@ -1392,7 +1379,6 @@ object Similarity {
         |SELECT query_id, q_label, CAST(COUNT(*) AS BIGINT) AS n_eligible,
         |  max(sim) AS best_sim, 1 AS recall_ok
         |FROM scored GROUP BY 1, 2 ORDER BY 1""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val qs = emb.filter(col("vec_id") < 10)
       val q = broadcast(qs.select(col("vec_id").as("query_id"),
@@ -1606,7 +1592,6 @@ object Similarity {
         |FROM t WHERE cos >= 0.3""".stripMargin) { (s, d) =>
       val emb = Tables.embeddings(s, d)
       val found = cosinePairs(emb, threshold = 0.3).select("vec_a", "vec_b")
-      graft.functions.GraftFunctions.register(s)
       val sample = broadcast(emb.filter(col("vec_id") < 50)
         .select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")))
       val truth = emb

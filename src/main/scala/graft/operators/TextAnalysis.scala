@@ -2169,7 +2169,6 @@ object TextAnalysis {
         |SELECT doc_id, char_entropy, n_distinct_chars,
         |  CAST(char_entropy < 3.5 AS INTEGER) AS is_low_entropy
         |FROM ent ORDER BY doc_id""".stripMargin) { (s, d) =>
-      graft.functions.GraftFunctions.register(s)
       Tables.documents(s, d)
         .filter(length(col("text")) > 0)
         .select(col("doc_id"),

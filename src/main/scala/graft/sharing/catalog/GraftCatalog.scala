@@ -196,7 +196,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   /** Evict BOTH the latest-snapshot entry and every `@vN` version-pinned
     * entry for the table — removing only the base key would leave stale
-    * pinned metadata resurrectable forever (the cache is unbounded). */
+    * pinned metadata resurrectable until the LRU evicts it. */
   override def invalidateTable(ident: Identifier): Unit = {
     val base = TableRef(share, ident.namespace().headOption.getOrElse(""),
       ident.name()).toString

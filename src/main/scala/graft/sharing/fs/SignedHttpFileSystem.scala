@@ -110,7 +110,7 @@ object SignedHttpFileSystem {
 
   /** Signed URL + size → self-contained graftshare path:
     *
-    *   graftshare:///t/<tableUid>[/k=v…]/f<base64url(url)>.<size>.parquet
+    *   graftshare:///t/<tableUid>[/k=v…]/f<base64url(url)>[.<refresh64>].<size>.parquet
     *
     * The URL+size live in the FILENAME, so every file of a table shares
     * the common base `graftshare:///t/<tableUid>` — pass that as the

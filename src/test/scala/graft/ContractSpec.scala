@@ -166,6 +166,49 @@ class ContractSpec extends AnyFunSuite {
     }.toSeq
   }
 
+  /** Session registrations of graft functions in Scala source, comments
+    * stripped: a temp-function registration, a by-name `call_function`
+    * of a graft function, or a `register` call on `GraftFunctions`. The
+    * names are split in this file so that a plain grep of the tree for
+    * them finds nothing. */
+  private def functionRegistrations(src: String): Seq[String] =
+    ("""\bcreateOrReplace""" + """TempFunction\s*\(|""" +
+      """\bcall_function\s*\(\s*"graft_|""" +
+      """\bGraftFunctions\s*\.\s*register\b""").r
+      .findAllIn(stripComments(src)).toSeq
+
+  test("graft functions are declared once, with no session registration") {
+    // GraftFunctions.table is the one declaration of every graft
+    // function: the Column API builds its expressions directly and
+    // GraftExtensions injects the same entries into SQL, so no code path
+    // registers a function on a session or calls one by name.
+    val temp = "createOrReplace" + "TempFunction"
+    val reg = "GraftFunctions" + ".register"
+    val byName = "call_function(" + "\"graft_"
+    assert(functionRegistrations(s"""reg.$temp("graft_dot",
+      exprs => DotProductFloat(exprs(0), exprs(1)), "built-in")
+      functions.call_function( "graft_minhash", sh, lit(64))
+      graft.functions.$reg(spark); ${byName}dot", a, b)
+      GraftFunctions . register(s)""").size == 5)
+    assert(functionRegistrations(s"""/** $reg(spark) and
+      * $temp( in prose */
+      graft.CacheRegistry.register(df) // $reg(s)
+      call_function("upper", c); ${reg}ed
+      GraftFunctions.minhash(sh, 64)""").isEmpty)
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val walk = java.nio.file.Files.walk(root)
+    val hits =
+      try walk.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".scala")).toSeq
+        .flatMap { f =>
+          functionRegistrations(java.nio.file.Files.readString(f))
+            .map(m => s"${root.relativize(f)}: $m")
+        }
+      finally walk.close()
+    assert(hits.isEmpty, "graft function registrations in main code:\n" +
+      hits.mkString("\n"))
+  }
+
   test("connector main code builds no v1 parquet relation") {
     // every read in graft/sharing plans through one DSv2 scan, the
     // GraftScan that GraftScan.table builds from a listing: snapshots,

@@ -60,7 +60,6 @@ class AudioKernelSpec extends SparkTestBase {
   }
 
   private def fused(docs: org.apache.spark.sql.DataFrame) = {
-    GraftFunctions.register(spark)
     docs.select(col("doc_id"), substring(col("text"), 1, 336).as("w"))
       .select(col("doc_id"),
         explode(array(lit(0), lit(1))).as("kind"), col("w"))
@@ -80,7 +79,6 @@ class AudioKernelSpec extends SparkTestBase {
   }
 
   test("kernel edge cases: empty, short, non-ASCII, all-silence") {
-    GraftFunctions.register(spark)
     import scala.jdk.CollectionConverters._
     val rows = Seq("", "abc", "@" * 336, "café€" * 80,
       "x" * 500).zipWithIndex

@@ -1,6 +1,9 @@
 package graft.functions
 
 import graft.{SparkTestBase, Tables}
+import graft.operators.Dedup
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 
 /** Parity pin for the fused integer-DCT pHash kernel [[PhashDct]]
@@ -8,7 +11,11 @@ import org.apache.spark.sql.functions._
   * must equal the spelled-out row-pass-explode + 64-column-aggregate
   * formulation it replaced (the formulation the DuckDB oracle still
   * carries). The spelled-out stack is reproduced here verbatim as the
-  * in-Spark ground truth. */
+  * in-Spark ground truth.
+  *
+  * It also pins how every graft kernel is reached: the Column API needs
+  * no set-up on any session, and SQL resolves every entry of
+  * [[GraftFunctions.table]] by name to the same value. */
 class PhashKernelSpec extends SparkTestBase {
 
   /** The mm_phash_dedup pixel frame: one 256-entry codepoint array per
@@ -56,7 +63,6 @@ class PhashKernelSpec extends SparkTestBase {
   }
 
   private def fused(docs: org.apache.spark.sql.DataFrame) = {
-    GraftFunctions.register(spark)
     pixelFrame(docs)
       .select(col("doc_id"), col("kind"),
         GraftFunctions.phashDct(col("pv")).as("f"))
@@ -73,7 +79,6 @@ class PhashKernelSpec extends SparkTestBase {
   }
 
   test("kernel edge cases: constant, zero, max-codepoint pixels") {
-    GraftFunctions.register(spark)
     val rows = Seq(
       Array.fill(256)(0),            // all-silence: every D = 0, no bits
       Array.fill(256)(97),           // constant: only DC mass, D(0,0) > 0
@@ -101,5 +106,110 @@ class PhashKernelSpec extends SparkTestBase {
     // max codepoints: same bit pattern as any positive constant
     assert(df(2).getLong(1) == df(1).getLong(1) &&
       df(2).getLong(2) == df(1).getLong(2))
+  }
+
+  /** A few rows with an input column for every graft function. */
+  private def kernelInputs(s: SparkSession): DataFrame = {
+    import s.implicits._
+    (0 until 6).map { i =>
+      (i.toLong,
+        Array.tabulate(8)(j => ((i * 7 + j * 3) % 11 - 5).toFloat / 4),
+        Array.tabulate(8)(j => ((i * 5 + j * 2) % 13 - 6).toFloat / 3),
+        Array.tabulate(4 + i)(j => (i * 1000003L + j * 7919L) % 2147483647L),
+        s"graft kernel row $i, " * (40 * i + 1),
+        i % 2,
+        Array.tabulate(256)(j => (j * (i + 3)) % 256),
+        (i * 37 % 256).toLong, (i * 91 % 256).toLong,
+        (i % 3) * 2097152L + 1048576L + i % 2)
+    }.toDF("id", "a", "b", "sh", "text", "kind", "pv", "x", "y", "k")
+  }
+
+  private val bloom: Array[Byte] = {
+    val f = org.apache.spark.util.sketch.BloomFilter.create(16, 0.01)
+    Seq(1L, 3L, 5L).foreach(f.putLong)
+    val bos = new java.io.ByteArrayOutputStream()
+    f.writeTo(bos)
+    bos.toByteArray
+  }
+
+  /** Each graft function once, as SQL text and as its Column-API call. */
+  private val kernelCases: Seq[(String, Column)] = {
+    import GraftFunctions._
+    val hex = bloom.map(b => f"$b%02X").mkString
+    Seq(
+      "graft_dot(a, b)" -> dot(col("a"), col("b")),
+      "graft_cosine(a, b)" -> cosine(col("a"), col("b")),
+      "graft_sq8_cosine(a, b)" -> sq8Cosine(col("a"), col("b")),
+      "graft_minhash(sh, 8)" -> minhash(col("sh"), 8),
+      "graft_simhash(sh)" -> simhash64(col("sh")),
+      "graft_byte_entropy(text)" -> byteEntropy(col("text")),
+      "graft_char_ngrams(text, 3)" -> charNgrams(col("text"), 3),
+      "graft_cdc_chunks(text)" -> cdcChunks(col("text")),
+      "graft_afp_syms(text, kind)" -> afpSyms(col("text"), col("kind")),
+      "graft_phash_dct(pv)" -> phashDct(col("pv")),
+      "graft_vote_best(k, 1)" -> voteBest(col("k"), 1),
+      "graft_lsh_bands(sh, 2, 2)" -> lshBands(col("sh"), 2, 2),
+      "graft_plane_dots(a, 4, 8, 7)" -> planeDots(col("a"), 4, 8, 7L),
+      "graft_lsh_keys(a, 2, 3, 8, 7)" -> lshKeys(col("a"), 2, 3, 8, 7L),
+      "graft_hilbert(x, y, 8)" -> hilbert(col("x"), col("y"), 8),
+      s"graft_bloom_contains(X'$hex', id)" -> bloomContains(bloom, col("id")))
+  }
+
+  test("the cases cover every graft function once") {
+    assert(kernelCases.map(_._1.takeWhile(_ != '(')) ==
+      GraftFunctions.table.map(_.name))
+  }
+
+  /** A new session of the test session with every graft name dropped
+    * from its function registry. */
+  private def bareSession(): SparkSession = {
+    val bare = spark.newSession()
+    val reg = bare.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    GraftFunctions.table.foreach(f =>
+      reg.dropFunction(FunctionIdentifier(f.name)))
+    assert(GraftFunctions.table.forall(f =>
+      !reg.functionExists(FunctionIdentifier(f.name))))
+    bare
+  }
+
+  test("every Column-API graft function evaluates on a session that " +
+      "knows no graft name") {
+    val bare = bareSession()
+    kernelCases.foreach { case (name, c) =>
+      val here = kernelInputs(spark).select(c)
+      val there = kernelInputs(bare).select(c)
+      assert(there.columns.toSeq == here.columns.toSeq, name)
+      assert(there.collect().toSeq == here.collect().toSeq, name)
+    }
+  }
+
+  test("Dedup.charNgramHashes works on a frame of a session that is not " +
+      "the active one") {
+    val bare = bareSession()
+    assert(SparkSession.active ne bare)
+    def ngrams(s: SparkSession) = kernelInputs(s)
+      .select(Dedup.charNgramHashes(col("text"), 3)).collect().toSeq
+    assert(ngrams(bare) == ngrams(spark))
+  }
+
+  test("every graft function resolves by name in SQL and equals its " +
+      "Column-API twin") {
+    val df = kernelInputs(spark)
+    df.createOrReplaceTempView("graft_kernel_inputs")
+    kernelCases.foreach { case (sql, c) =>
+      val bySql = spark.sql(s"SELECT $sql FROM graft_kernel_inputs")
+      val byColumn = df.select(c)
+      assert(bySql.columns.toSeq == byColumn.columns.toSeq, sql)
+      assert(bySql.collect().toSeq == byColumn.collect().toSeq, sql)
+    }
+  }
+
+  test("a non-literal scalar parameter fails analysis naming the argument") {
+    kernelInputs(spark).createOrReplaceTempView("graft_kernel_inputs")
+    val e = intercept[Exception](
+      spark.sql("SELECT graft_minhash(sh, id) FROM graft_kernel_inputs"))
+    assert(e.getMessage.contains(
+      "graft_minhash: argument 2 (numHashes) must be a literal"), e.getMessage)
   }
 }

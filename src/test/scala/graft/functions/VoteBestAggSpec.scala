@@ -15,7 +15,6 @@ class VoteBestAggSpec extends SparkTestBase {
 
   test("fused vote-best matches the spelled-out two-aggregate recipe") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // deterministic synthetic candidates: engineered duplicate rows so
     // several (ma, mb, off) groups have votes in {1..7}, including exact
     // vote ties between a positive and a negative off for the same pair

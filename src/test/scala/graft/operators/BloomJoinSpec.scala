@@ -15,7 +15,7 @@ class BloomJoinSpec extends SparkTestBase {
     val fact = Tables.lineitem(spark, sf0001)
 
     val reduced = BloomJoin
-      .bloomReduceJoin(spark, fact, "l_orderkey", dim, "o_orderkey")
+      .bloomReduceJoin(fact, "l_orderkey", dim, "o_orderkey")
       .select("l_orderkey", "l_linenumber", "o_orderdate")
     val plain = fact.join(dim, fact("l_orderkey") === dim("o_orderkey"))
       .select("l_orderkey", "l_linenumber", "o_orderdate")
@@ -30,7 +30,6 @@ class BloomJoinSpec extends SparkTestBase {
     val bloom = dim.stat.bloomFilter("o_orderkey", n, 0.01)
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    GraftFunctions.register(spark)
     val passed = dim.filter(
       GraftFunctions.bloomContains(bos.toByteArray, col("o_orderkey"))).count()
     assert(passed === n)
@@ -55,7 +54,6 @@ class BloomJoinSpec extends SparkTestBase {
     val bloom = keys.stat.bloomFilter("k", 1000, 0.01)
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    GraftFunctions.register(spark)
     val foreign = (100001L to 101000L).toDF("k")
     val falsePositives = foreign.filter(
       GraftFunctions.bloomContains(bos.toByteArray, col("k"))).count()

@@ -44,11 +44,10 @@ class DedupSpec extends SparkTestBase {
     // buckets are chain-linked, abridging the pairwise listing). Assert
     // the precondition holds on the gate corpus so the certificate is
     // sound.
-    graft.functions.GraftFunctions.register(spark)
     val sig = docs.select(col("doc_id"),
         Dedup.shingleHashes(col("text"), 3).as("sh"))
       .filter(size(col("sh")) > 0)
-      .withColumn("sig", Dedup.minhashSignature(spark, col("sh"), 64))
+      .withColumn("sig", Dedup.minhashSignature(col("sh"), 64))
     val maxBucket = sig
       .select(posexplode(graft.functions.GraftFunctions.lshBands(col("sig"), 16, 4)))
       .groupBy("pos", "col").count()
@@ -315,7 +314,7 @@ class DedupSpec extends SparkTestBase {
         Dedup.shingleHashes(col("text"), 3).as("sh"))
       .filter(size(col("sh")) > 0)
     val both = sh.select(
-      Dedup.minhashSignature(spark, col("sh"), 64).as("native"),
+      Dedup.minhashSignature(col("sh"), 64).as("native"),
       Dedup.minhashSignatureHof(col("sh"), 64).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
     assert(both.count() > 0)
@@ -323,7 +322,7 @@ class DedupSpec extends SparkTestBase {
 
   test("native simhash kernel matches the HOF formulation exactly") {
     val both = docs.select(
-      Dedup.simhash(spark, col("text")).as("native"),
+      Dedup.simhash(col("text")).as("native"),
       Dedup.simhashHof(col("text")).as("hof"))
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
     assert(both.count() > 0)

@@ -52,7 +52,6 @@ class LayoutSpec extends SparkTestBase {
 
   test("hilbert index is a bijective walk with unit steps (bits=4 full grid)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val cells = for (x <- 0 until 16; y <- 0 until 16)
       yield (x.toLong, y.toLong)
     val walked = cells.toDF("x", "y")

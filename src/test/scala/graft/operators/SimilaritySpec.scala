@@ -133,7 +133,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("native codegen kernels match the higher-order-function formulation") {
-    graft.functions.GraftFunctions.register(spark)
     val diff = emb.limit(200).as("a")
       .crossJoin(emb.limit(20).select(col("embedding").as("e2"),
         col("vec_id").as("v2")).as("b"))
@@ -158,7 +157,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("native LSH-key kernel matches the HOF signature formulation exactly") {
-    graft.functions.GraftFunctions.register(spark)
     // native: array of packed longs, position = table; HOF: array of
     // (t, sig) structs — compare per (t, sig) multiset per vector
     val native = emb.select(col("vec_id"),
@@ -178,7 +176,6 @@ class SimilaritySpec extends SparkTestBase {
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
     assert(pairs.nonEmpty)
     assert(pairs.forall(_._2 >= threshold))
-    graft.functions.GraftFunctions.register(spark)
     val brute = emb.as("a").crossJoin(
         emb.select(col("vec_id").as("v2"), col("embedding").as("e2")).as("b"))
       .filter(col("vec_id") < col("v2"))
@@ -211,7 +208,6 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("semantic dedup: total assignment; every drop is justified by a twin") {
-    graft.functions.GraftFunctions.register(spark)
     val out = Similarity.semanticDedup(emb, k = 8, iters = 2, threshold = 0.3)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
     assert(out.length == emb.count())
@@ -322,7 +318,6 @@ class SimilaritySpec extends SparkTestBase {
         emb, emb.filter(col("vec_id") === 0L), 20)
       .select(col("neighbor_id"), col("sim"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1))
-    graft.functions.GraftFunctions.register(spark)
     val ids = cand.map(_._1).toSet
     val ce = emb.filter(col("vec_id").isin(ids.toSeq: _*))
       .select(col("vec_id").as("ia"), col("embedding").as("ea"))
@@ -470,7 +465,6 @@ class SimilaritySpec extends SparkTestBase {
       brute.size
     assert(recall >= 0.8, s"sq8 recall@5 = $recall")
     // quantized cosine stays within int8 quantization error of exact
-    graft.functions.GraftFunctions.register(spark)
     val exact = emb.select(col("vec_id").as("a"), col("embedding").as("ea"))
       .join(emb.filter(col("vec_id") < 10)
         .select(col("vec_id").as("b"), col("embedding").as("eb")),
@@ -504,7 +498,6 @@ class SimilaritySpec extends SparkTestBase {
     assert(recallAt(100) >= r20)
     // rerank sims are the exact cosines (not hamming approximations):
     // every emitted sim matches bruteForceTopK's value for that pair
-    graft.functions.GraftFunctions.register(spark)
     val exact = emb.select(col("vec_id").as("a"), col("embedding").as("ea"))
       .join(qs.select(col("vec_id").as("b"), col("embedding").as("eb")),
         col("a") =!= col("b"))

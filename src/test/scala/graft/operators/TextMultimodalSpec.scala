@@ -380,7 +380,6 @@ class TextMultimodalSpec extends SparkTestBase {
   }
 
   test("cdc chunk kernel equals the spelled-out HOF formulation") {
-    graft.functions.GraftFunctions.register(spark)
     val pows = Iterator.iterate(1L)(_ * 31L).take(8).toSeq
     val hashSum = (0 to 7).map(j =>
       s"CAST(least(ascii(substring(t, CAST(i - $j AS INT), 1)), 255) " +
@@ -585,7 +584,6 @@ class TextMultimodalSpec extends SparkTestBase {
 
   test("byte entropy: known values, empty→null, and the quality ordering") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rows = Seq("aabb", "abcd", "aaaa", "", "abab cdcd efef")
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "t")
       .select(col("id"),
